@@ -11,12 +11,10 @@ Reference semantics (`/root/reference/src/floorist/floorist.py`):
   so re-running the full query cannot duplicate rows; if the cleanup itself
   fails the dump is aborted (`floorist.py:199-213`,
   `tests/test_floorist_standalone.py:92-113,162-200`).
-* **F9 per-dump transaction** — commit after success, rollback on error.
-  Native mode has no database transaction (parquet scans are snapshot-free
-  by construction); JDBC parity mode keeps single-connection semantics via
-  ``numPartitions=1`` (see sources/jdbc.py). The hooks are injectable so
-  the JDBC path can wire real commit/rollback (`floorist.py:148-152,
-  216-229`).
+* **F9 one snapshot per dump** — the reference commits after each dump
+  and rolls back on error. Here nothing needs either: native mode scans
+  Parquet, which is snapshot-free, and a JDBC read auto-commits over the
+  one connection ``sources/jdbc.py`` pins per dump.
 * **F10 execute(row, dump_count)** — missing ``prefix``/``query`` is not a
   parse error: it fails that dump only and later dumps still run
   (`floorist.py:186-197`, `tests/test_floorist.py:190-198`).
@@ -39,6 +37,7 @@ from enum import Enum
 
 from pyspark.sql import DataFrame
 
+from floorist_spark.floorplan import DEFAULT_CHUNKSIZE
 from floorist_spark.storage import StorageClient
 
 #: Reference retry envelope (`floorist.py:22-23`).
@@ -84,16 +83,12 @@ class RetryPolicy:
         return any(p in text for p in RETRYABLE_ERROR_PATTERNS)
 
 
-def _noop() -> None:
-    return None
-
-
 class DumpExecutor:
     """F10: orchestrate path → query → sink per floorplan row, with
-    retry/cleanup/commit semantics (`floorist.py:159-256`).
+    retry/cleanup semantics (`floorist.py:159-256`).
 
     ``query_runner`` builds the DataFrame for a SQL string — ``spark.sql``
-    in native mode, a JDBC read in parity mode. The DataFrame is lazy; the
+    in native mode, a JDBC read in jdbc mode. The DataFrame is lazy; the
     only actions are the emptiness probe and the write, both inside the
     retry scope so a mid-write failure replays the whole query after
     cleanup.
@@ -104,19 +99,13 @@ class DumpExecutor:
         storage: StorageClient,
         query_runner: Callable[[str], DataFrame],
         retry_policy: RetryPolicy | None = None,
-        parity: bool = True,
         run_date: date | None = None,
-        commit: Callable[[], None] = _noop,
-        rollback: Callable[[], None] = _noop,
         sleep: Callable[[float], None] = time.sleep,
     ):
         self.storage = storage
         self.query_runner = query_runner
         self.retry_policy = retry_policy or RetryPolicy()
-        self.parity = parity
         self.run_date = run_date
-        self.commit = commit
-        self.rollback = rollback
         self.sleep = sleep
 
     def execute(self, row: dict, dump_count: int) -> bool:
@@ -127,7 +116,7 @@ class DumpExecutor:
             query = row["query"]
             # missing chunksize defaults to 1000; explicit 0/None → unchunked
             # (`floorist.py:194`)
-            chunksize = row.get("chunksize", 1000) or None
+            chunksize = row.get("chunksize", DEFAULT_CHUNKSIZE) or None
         except KeyError as ex:
             logging.exception("[Dump #%d] %s", dump_count, ex)
             return False
@@ -152,23 +141,12 @@ class DumpExecutor:
 
                 logging.debug("[Dump #%d] Query: %s", dump_count, query)
                 df = self.query_runner(query)
-                self.storage.write_parquet(
-                    df, target, chunksize=chunksize, parity=self.parity, dump_count=dump_count
-                )
+                self.storage.write_parquet(df, target, chunksize=chunksize, dump_count=dump_count)
                 logging.debug("[Dump #%d] Dumped %s to %s", dump_count, query, path)
-
-                self.commit()
                 return True
 
             except Exception as ex:
                 logging.warning("[Dump #%d] Database error, rolling back", dump_count)
-                try:
-                    self.rollback()
-                except Exception as rollback_ex:
-                    logging.exception(
-                        "[Dump #%d] Rollback failed: %s", dump_count, rollback_ex
-                    )
-
                 result = self.retry_policy.evaluate(ex, attempt)
                 if result == RetryResult.FAILURE:
                     logging.exception("[Dump #%d] %s", dump_count, ex)

@@ -14,7 +14,8 @@ Reference behavior reproduced (citations into /root/reference):
 * ``chunksize`` is optional; a MISSING key defaults to 1000 rows/file,
   while an explicitly falsy value (0/None) means "unchunked" — a single
   output file (`src/floorist/floorist.py:194`:
-  ``row.get('chunksize', 1000) or None``);
+  ``row.get('chunksize', 1000) or None``). The executor applies this rule
+  when the dump runs (``DumpExecutor.execute``);
 * a row missing ``prefix`` or ``query`` is not a parse error: it surfaces
   when the dump executes, fails that dump only, and later dumps still run
   (`src/floorist/floorist.py:186-190`, `tests/test_floorist.py:190-198`).
@@ -22,32 +23,12 @@ Reference behavior reproduced (citations into /root/reference):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from typing import IO, Any
 
 import yaml
 
 #: Reference default rows-per-output-file (`src/floorist/floorist.py:194`).
 DEFAULT_CHUNKSIZE = 1000
-
-
-@dataclass(frozen=True)
-class DumpSpec:
-    """One (query -> prefix) export; the unit of success/failure."""
-
-    prefix: str
-    query: str
-    chunksize: int | None = None
-    #: raw YAML row, kept so missing-key errors reproduce reference logging
-    raw: dict[str, Any] = field(default_factory=dict, compare=False, repr=False)
-
-    @property
-    def effective_chunksize(self) -> int | None:
-        """``None`` means unchunked (one file): explicit 0/None are both
-        falsy in the reference (`src/floorist/floorist.py:194`). The
-        missing-key→1000 default is applied at spec construction
-        (:func:`spec_from_row`), matching ``row.get('chunksize', 1000)``."""
-        return self.chunksize if self.chunksize else None
 
 
 class FloorplanError(ValueError):
@@ -66,18 +47,6 @@ def parse_floorplan(stream: str | IO[str]) -> list[dict[str, Any]]:
         if not isinstance(row, dict):
             raise FloorplanError(f"floorplan row {i} must be a mapping, got {type(row).__name__}")
     return data
-
-
-def spec_from_row(row: dict[str, Any]) -> DumpSpec:
-    """Build a DumpSpec from a raw row. Raises KeyError on missing
-    prefix/query — caught per-dump by the executor, mirroring
-    `src/floorist/floorist.py:186-190`."""
-    return DumpSpec(
-        prefix=row["prefix"],
-        query=row["query"],
-        chunksize=row.get("chunksize", DEFAULT_CHUNKSIZE),
-        raw=row,
-    )
 
 
 def load_floorplan(path: str) -> list[dict[str, Any]]:

@@ -9,9 +9,9 @@ wrapped in :func:`track`, and :func:`release_caches` unpersists everything
 recorded. It is called
 
 * by the catalog boundary before building each entry (caches of the
-  PREVIOUS, already-collected entry — this covers any external harness
-  that sweeps the catalog, including the grading driver),
-* by the export engine after each dump, and
+  PREVIOUS, already-collected entry — this covers the export engine's
+  catalog dumps and any external harness that sweeps the catalog through
+  ``__spark_entry__``), and
 * by bench/selfcheck at the end of their sweeps,
 
 keeping a ~100-query session's executor memory flat instead of accumulating
@@ -163,9 +163,9 @@ class TrackedCheckpoint:
 def local_checkpoint(df: DataFrame) -> tuple[DataFrame, TrackedCheckpoint]:
     """``df.localCheckpoint()`` plus a release handle for its blocks.
 
-    The id-diff attributes new persistent RDDs to this checkpoint; under
-    concurrent dump threads an id could be misattributed, costing at worst
-    a recompute of another dump's cache — never a correctness issue."""
+    The id-diff attributes new persistent RDDs to this checkpoint; the
+    export engine runs one dump at a time, so no other build adds ids in
+    between."""
     sc = df.sparkSession.sparkContext
     before = _persistent_ids(sc)
     out = df.localCheckpoint()

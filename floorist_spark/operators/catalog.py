@@ -77,73 +77,74 @@ def _with_cache_release(
 #: (tests/test_llm_operators.py enforces both invariants). Pure ordering —
 #: membership and semantics of every entry are unchanged.
 #:
-#: Round-11 rotation. The window is MECHANICALLY derived: the 49 stalest
+#: Round-12 rotation. The window is MECHANICALLY derived: the 49 stalest
 #: entries by last driver-green round, computed from the committed
-#: CORRECTNESS_r0*.json artifacts strictly before ROTATION_ROUND
+#: CORRECTNESS_r*.json artifacts strictly before ROTATION_ROUND
 #: (tests/test_gate_rotation.py re-derives that ledger and fails if this
 #: list is not a stalest-first window, if any family is unrepresented, or
-#: if the max-staleness claim is violated). Snapshot at ROTATION_ROUND=11:
-#: ledger distribution is r6:30 / r7:47 / r8:49 / r9:48 / r10:50 — so the
-#: window is the FULL 30-entry r6 cohort plus 19 of the 47 r7 entries at
+#: if the max-staleness claim is violated). Snapshot at ROTATION_ROUND=12:
+#: ledger distribution is r7:28 / r8:49 / r9:48 / r10:49 / r11:50 — so the
+#: window is the FULL 28-entry r7 cohort plus 21 of the 49 r8 entries at
 #: the tie boundary (ties free per the test), picked to thicken the
-#: thinnest families in the window: q42 (the only q in the cohort — the
-#: r6 set has no q at all), then 6 each of c/t/d lexicographically. OUT:
-#: the remaining 28 r7 ties and everything green r8-r10. Staleness bound
-#: after this gate runs green: max 11-7 = 4 <= 5.
-ROTATION_ROUND = 11
+#: thinnest families in the window: the r7 cohort has no q and one each of
+#: e/s, so the 21 go thinnest-family-first (lexicographic within a family),
+#: ending q:6 s:5 e:6 m:6 c:6. OUT: the remaining 28 r8 ties and everything
+#: green r9-r11. Staleness bound after this gate runs green: max 12-8 = 4
+#: <= 5.
+ROTATION_ROUND = 12
 
 GATE_PRIORITY = [
-    # -- last driver green r6 (the full 30-entry cohort) -------------------
-    "c15_curriculum_phases",
-    "c19_contamination_report",
-    "d19_lsh_tuning_curve",
-    "d20_source_dup_overlap",
-    "d23_dup_graph_pagerank",
-    "d25_lsh_recall_audit",
-    "e25_attribution",
-    "e27_dwell_histogram",
-    "e28_lateness_audit",
-    "e29_streaming_funnel",
-    "e30_bot_regularity",
-    "e31_seasonality_profile",
-    "e32_ewma_trend",
-    "e33_outage_gaps",
-    "e34_conversion_lag",
-    "m13_vad_segments",
-    "m14_cdc_chunks",
-    "m15_chunk_overlap_pairs",
-    "m16_payload_size_census",
-    "m17_block_size_sweep",
-    "s14_index_health",
-    "s15_probe_frontier",
-    "s16_mmr_diversify",
-    "s17_hard_negatives",
-    "s18_rrf_fusion",
-    "s19_tombstone_compaction",
-    "s20_cell_rebalance",
-    "t20_readability",
-    "t23_encoding_anomalies",
-    "t24_source_divergence",
-    # -- last driver green r7 (19 of 47; family-balancing tie-break) -------
-    "q42_full_outer_join",
-    "c02_stratified_sample",
-    "c04_pack_bins",
-    "c05_decontamination",
-    "c11_bloom_decontaminate",
-    "c12_passage_chunks",
-    "c13_data_card",
-    "t01_token_stats",
-    "t04_fingerprint",
-    "t05_top_bigrams",
-    "t07_token_rarity",
-    "t08_word_repetition",
-    "t09_dup_ngram_fraction",
-    "d01_exact_dedup",
-    "d02_normalized_dedup",
-    "d03_minhash_lsh_candidates",
-    "d04_lsh_jaccard_dedup",
-    "d05_simhash",
-    "d06_simhash_near_pairs",
+    # -- last green at the r7 gate (the full 28-entry cohort) --------------
+    "c16_dedup_aware_mixture",
+    "c17_budget_waterfill",
+    "c18_oversample_plan",
+    "c21_ctx_length_sweep",
+    "d13_minhash_calibration",
+    "d14_ngram_containment",
+    "d15a_token_census",
+    "d15b_norm_digest",
+    "d16_soft_dedup_weights",
+    "d17_incremental_dedup",
+    "d21_shingle_novelty",
+    "d22_boilerplate_census",
+    "d24_exact_substring_spans",
+    "d26_cluster_size_census",
+    "d27_threshold_sweep",
+    "e35_seasonal_anomaly",
+    "m18_caption_rate_audit",
+    "m21_phash_candidate_histogram",
+    "s21_embedding_hygiene",
+    "t10_tfidf_topk",
+    "t12_bigram_lm_score",
+    "t13_gopher_rules",
+    "t15_bpe_merges",
+    "t16_zipf_audit",
+    "t17_token_diversity",
+    "t21_vocab_coverage",
+    "t22_rake_keyphrases",
+    "t25_code_detect",
+    # -- last green at the r8 gate (21 of 49; family-balancing tie-break) --
+    "c20_shard_manifest",
+    "c22_split_leakage_audit",
+    "e26_alert_throttle",
+    "e36_burst_windows",
+    "e37_session_length_histogram",
+    "e38_user_concentration",
+    "e39_watermark_delay_sweep",
+    "m12_block_dedup_census",
+    "m19_modality_mix_manifest",
+    "m20_byte_uniformity_census",
+    "m22_magic_byte_census",
+    "q08_distinct",
+    "q09_in_subquery",
+    "q10_quoted_idents",
+    "q11_pricing_summary",
+    "q12_shipping_priority",
+    "q13_local_supplier_volume",
+    "s22_nprobe_cost_frontier",
+    "s23_recall_vs_nprobe",
+    "s24_centroid_separation",
+    "s25_quantization_width_sweep",
 ]
 
 

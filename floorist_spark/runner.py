@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import logging
 from datetime import date
+from functools import partial
 from os import environ
 
 from floorist_spark.config import Config, base_output_uri, get_config, s3a_conf
@@ -32,7 +33,7 @@ class FlooristSpark:
     Catalyst over the registered views; ``mode="jdbc"`` pushes them to live
     PostgreSQL for reference parity (`sources/jdbc.py`)."""
 
-    def __init__(self, config: Config, spark=None, parity: bool = True):
+    def __init__(self, config: Config, spark=None):
         self.config = config
         self.spark = spark or get_spark("floorist_spark", extra_conf=s3a_conf(config))
 
@@ -41,10 +42,9 @@ class FlooristSpark:
         logging.info("Successfully connected to the S3 bucket")
 
         if config.mode == "jdbc":
-            from floorist_spark.sources.jdbc import JdbcQueryRunner
+            from floorist_spark.sources.jdbc import read_query
 
-            runner = JdbcQueryRunner(self.spark, config, parity=parity)
-            commit, rollback = runner.commit, runner.rollback
+            runner = partial(read_query, self.spark, config)
         else:
             from floorist_spark.operators.catalog import CATALOG_PREFIX, resolve_catalog_query
 
@@ -67,7 +67,6 @@ class FlooristSpark:
                 df = resolve_catalog_query(self.spark, query, _dir)
                 return df if df is not None else self.spark.sql(query)
 
-            commit = rollback = lambda: None
         logging.info("Successfully connected to the database")
 
         # FLOORIST_RUN_DATE=YYYY-MM-DD pins the partition date for
@@ -76,57 +75,18 @@ class FlooristSpark:
         if environ.get("FLOORIST_RUN_DATE"):
             run_date = date.fromisoformat(environ["FLOORIST_RUN_DATE"])
 
-        self.executor = DumpExecutor(
-            self.storage,
-            runner,
-            RetryPolicy(),
-            parity=parity,
-            run_date=run_date,
-            commit=commit,
-            rollback=rollback,
-        )
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *args):
-        return None
+        self.executor = DumpExecutor(self.storage, runner, RetryPolicy(), run_date=run_date)
 
     def run(self) -> None:
-        """F11: per-dump isolation + partial-failure exit code
-        (`floorist.py:279-292`).
-
-        ``FLOORIST_MAX_PARALLEL_DUMPS > 1`` opts into concurrent dump
-        execution — a Spark-native improvement over the reference's
-        single-connection sequential loop: independent dumps are
-        independent Spark jobs, and one session schedules them
-        concurrently across the cluster. Default stays sequential (exact
-        reference parity, deterministic log interleaving); per-dump
-        isolation and the exit-code contract are unchanged either way."""
-        from floorist_spark.operators._cache import release_caches
-
+        """F11: run the dumps in floorplan order, each isolated from the
+        others, and exit(1) if any failed (`floorist.py:279-292`). A catalog
+        dump releases the previous catalog dump's cached intermediates when
+        it is built (``catalog._with_cache_release``), so a many-dump
+        floorplan stays memory-flat without a release here."""
         rows = load_floorplan(self.config.floorplan_filename)
-        max_parallel = int(environ.get("FLOORIST_MAX_PARALLEL_DUMPS", "1"))
-
-        if max_parallel > 1 and len(rows) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-                results = list(
-                    pool.map(
-                        lambda it: self.executor.execute(it[1], it[0] + 1),
-                        enumerate(rows),
-                    )
-                )
-            dumped_count = sum(results)
-            release_caches()
-        else:
-            dumped_count = 0
-            for i, row in enumerate(rows):
-                dumped_count += self.executor.execute(row, i + 1)
-                # free any operator intermediates this dump persisted —
-                # a many-dump floorplan must stay memory-flat
-                release_caches()
+        dumped_count = 0
+        for i, row in enumerate(rows):
+            dumped_count += self.executor.execute(row, i + 1)
 
         logging.info("Dumped %d from total of %d", dumped_count, len(rows))
         if dumped_count != len(rows):
@@ -142,5 +102,4 @@ def _configure_loglevel() -> None:
 def main() -> None:
     _configure_loglevel()
     mode = environ.get("FLOORIST_MODE", "native")
-    with FlooristSpark(get_config(mode=mode)) as f:
-        f.run()
+    FlooristSpark(get_config(mode=mode)).run()

@@ -1,3 +1,2 @@
-"""Data sources: JDBC (PostgreSQL parity, SURVEY §2 F2/F3) and
-format-dispatching file readers (parquet/ORC/CSV/JSON, ``files.py``);
+"""Data sources: the JDBC reader (PostgreSQL parity, SURVEY §2 F2/F3);
 the parquet testdata scans live in ``floorist_spark.session``."""

@@ -6,17 +6,11 @@ cursor pages the opaque SQL string into bounded-memory chunks. The Spark
 equivalent is the built-in JDBC source with the ``query`` option; memory is
 bounded by ``fetchsize`` (rows per round-trip) instead of pandas chunks.
 
-Parity vs scale:
-
-* **parity** (``numPartitions=1``): one connection ⇒ one snapshot per dump,
-  matching the reference's per-dump transaction semantics (F9,
-  `floorist.py:128,148-152`). This is the default, because correctness of
-  the snapshot is part of the reference contract.
-* **scale**: partitioned reads (``partitionColumn/lowerBound/upperBound/
-  numPartitions``) open N connections ⇒ N snapshots. That relaxation is
-  explicit opt-in; at 100 TB the JDBC source is the wrong tool anyway — a
-  CDC feed or parquet landing zone replaces it, and the rest of the engine
-  is source-agnostic.
+F9 (one database snapshot per dump): every read pins ``numPartitions=1``,
+so a dump's whole result comes over ONE connection and therefore from one
+snapshot, matching the reference's per-dump transaction
+(`floorist.py:128,148-152`). Spark JDBC reads auto-commit, so there is no
+transaction to commit or roll back around the dump.
 
 F3 (uuid→string): Spark's built-in PostgresDialect already maps PG ``uuid``
 to ``StringType`` — the custom OID-2950 type caster at
@@ -77,24 +71,18 @@ def build_jdbc_options(
     config: Config,
     query: str,
     fetchsize: int | None = None,
-    parity: bool = True,
-    num_partitions: int | None = None,
 ) -> dict[str, str]:
     """The options dict for ``spark.read.format("jdbc")`` — split out so the
     surface is unit-testable without a live PostgreSQL."""
-    opts = {
+    return {
         "url": jdbc_url(config),
         "query": query,
         "user": config.database_username or "",
         "password": config.database_password or "",
         "fetchsize": str(fetchsize or DEFAULT_FETCHSIZE),
         "driver": config.jdbc_driver or DEFAULT_DRIVER,
+        "numPartitions": "1",
     }
-    if parity:
-        opts["numPartitions"] = "1"
-    elif num_partitions:
-        opts["numPartitions"] = str(num_partitions)
-    return opts
 
 
 def read_query(
@@ -102,14 +90,13 @@ def read_query(
     config: Config,
     query: str,
     fetchsize: int | None = None,
-    parity: bool = True,
 ) -> DataFrame:
     """F2: execute an opaque SQL string on PostgreSQL, lazily
     (`floorist.py:141-146`). Catalyst still prunes/pushes into the outer
     plan; the inner query runs verbatim on the server, exactly like the
     reference's ``pd.read_sql``."""
     reader = spark.read.format("jdbc")
-    for k, v in build_jdbc_options(config, query, fetchsize, parity).items():
+    for k, v in build_jdbc_options(config, query, fetchsize).items():
         reader = reader.option(k, v)
     return coerce_unwritable_columns(reader.load())
 
@@ -127,24 +114,3 @@ def coerce_unwritable_columns(df: DataFrame) -> DataFrame:
             for f in df.schema.fields
         ]
     )
-
-
-class JdbcQueryRunner:
-    """Callable query runner for the DumpExecutor in jdbc mode, carrying the
-    (no-op on Spark) commit/rollback hooks — JDBC reads auto-commit per
-    connection, so per-dump snapshot isolation comes from ``numPartitions=1``
-    (F9 relaxation, documented above)."""
-
-    def __init__(self, spark: SparkSession, config: Config, parity: bool = True):
-        self.spark = spark
-        self.config = config
-        self.parity = parity
-
-    def __call__(self, query: str) -> DataFrame:
-        return read_query(self.spark, self.config, query, parity=self.parity)
-
-    def commit(self) -> None:
-        return None
-
-    def rollback(self) -> None:
-        return None

@@ -29,7 +29,9 @@ Reference semantics reproduced:
   re-writing cannot duplicate rows (`floorist.py:112-113,209-213`).
 * **F12 verify** — startup probe of the bucket root; on an access-denied
   style failure retry with a trailing slash (credentials without
-  ListBuckets), otherwise fail fast (`floorist.py:81-92`).
+  ListBuckets), otherwise fail fast (`floorist.py:81-92`). A missing local
+  (``file://``) output directory fails with a ``ValueError`` that names
+  the URI and ``FLOORIST_OUTPUT_URI``.
 """
 
 from __future__ import annotations
@@ -89,8 +91,14 @@ class StorageClient:
                 fs = self._fs(self.base_uri)
                 if fs.globStatus(self._jpath(self.base_uri.rstrip("/") + "/*")) is None:
                     raise
-            else:
-                raise
+                return
+            parsed = urlparse(self.base_uri)
+            if parsed.scheme in ("", "file") and not os.path.isdir(parsed.path):
+                raise ValueError(
+                    f"output directory {self.base_uri} does not exist; create it "
+                    "or point FLOORIST_OUTPUT_URI at an existing directory"
+                ) from ex
+            raise
 
     # -- F4 ------------------------------------------------------------------
 

@@ -8,6 +8,7 @@ from datetime import date
 import pytest
 
 from floorist_spark.executor import DumpExecutor, RetryPolicy, RetryResult
+from floorist_spark.floorplan import DEFAULT_CHUNKSIZE, parse_floorplan
 
 
 class FakeStorage:
@@ -24,7 +25,7 @@ class FakeStorage:
         path = f"{prefix}/year_created={d.year}/month_created={d.month}/day_created={d.day}"
         return path, f"{self.base_uri}/{path}"
 
-    def write_parquet(self, df, target, chunksize=None, parity=True, dump_count=0):
+    def write_parquet(self, df, target, chunksize=None, dump_count=0):
         self.writes.append((df, target, chunksize))
         return 1
 
@@ -106,14 +107,25 @@ def test_success_path_writes_once():
 
 
 def test_missing_prefix_fails_dump_without_raising():
+    # not a parse error: the row parses, fails only its own dump, and the
+    # next dump still runs (reference tests/test_floorist.py:190-198)
     storage, runner = FakeStorage(), FlakyRunner()
-    assert make_executor(storage, runner).execute({"query": "SELECT 1"}, 1) is False
+    ex = make_executor(storage, runner)
+    (row,) = parse_floorplan("- query: SELECT 1")
+    assert ex.execute(row, 1) is False
     assert storage.writes == []
+    assert ex.execute(ROW, 2) is True
+    assert len(storage.writes) == 1
 
 
 def test_missing_query_fails_dump_without_raising():
     storage, runner = FakeStorage(), FlakyRunner()
-    assert make_executor(storage, runner).execute({"prefix": "p"}, 1) is False
+    ex = make_executor(storage, runner)
+    (row,) = parse_floorplan("- prefix: a/b")
+    assert ex.execute(row, 1) is False
+    assert runner.calls == 0
+    assert ex.execute(ROW, 2) is True
+    assert len(storage.writes) == 1
 
 
 def test_retryable_error_cleans_up_and_retries():
@@ -157,36 +169,15 @@ def test_cleanup_failure_aborts_dump():
 
 
 def test_chunksize_missing_defaults_to_1000():
+    # reference floorist.py:194: row.get('chunksize', 1000) or None
     storage, runner = FakeStorage(), FlakyRunner()
     make_executor(storage, runner).execute(ROW, 1)
-    assert storage.writes[0][2] == 1000
+    assert storage.writes[0][2] == DEFAULT_CHUNKSIZE == 1000
 
 
 def test_chunksize_zero_becomes_unchunked():
     storage, runner = FakeStorage(), FlakyRunner()
-    make_executor(storage, runner).execute({**ROW, "chunksize": 0}, 1)
-    assert storage.writes[0][2] is None
-
-
-def test_commit_called_once_per_successful_dump():
-    # F9 surface (reference floorist.py:216-218)
-    storage, runner = FakeStorage(), FlakyRunner()
-    commits: list[int] = []
-    ex = DumpExecutor(
-        storage, runner, RetryPolicy(), run_date=date(2026, 1, 2),
-        commit=lambda: commits.append(1), sleep=lambda s: None,
-    )
-    ex.execute(ROW, 1)
-    assert commits == [1]
-
-
-def test_rollback_called_on_error():
-    storage = FakeStorage()
-    runner = FlakyRunner([Exception("boom")])
-    rollbacks: list[int] = []
-    ex = DumpExecutor(
-        storage, runner, RetryPolicy(), run_date=date(2026, 1, 2),
-        rollback=lambda: rollbacks.append(1), sleep=lambda s: None,
-    )
-    assert ex.execute(ROW, 1) is False
-    assert rollbacks == [1]
+    ex = make_executor(storage, runner)
+    ex.execute({**ROW, "chunksize": 0}, 1)
+    ex.execute({**ROW, "chunksize": None}, 2)
+    assert [w[2] for w in storage.writes] == [None, None]

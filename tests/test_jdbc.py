@@ -19,16 +19,11 @@ CFG = Config(
 
 def test_options_parity_mode_pins_single_partition():
     # F9: one connection = one snapshot per dump (floorist.py:128)
-    opts = build_jdbc_options(CFG, "SELECT 1", parity=True)
+    opts = build_jdbc_options(CFG, "SELECT 1")
     assert opts["numPartitions"] == "1"
     assert opts["url"] == "jdbc:postgresql://dbhost/insights"
     assert opts["query"] == "SELECT 1"
     assert opts["fetchsize"] == "1000"  # reference default chunksize
-
-
-def test_options_scale_mode_allows_partitioned_read():
-    opts = build_jdbc_options(CFG, "SELECT 1", parity=False, num_partitions=16)
-    assert opts["numPartitions"] == "16"
 
 
 def test_custom_fetchsize():

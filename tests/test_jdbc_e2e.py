@@ -24,13 +24,14 @@ from __future__ import annotations
 
 import os
 from datetime import date
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
 
 from floorist_spark.config import Config
 from floorist_spark.executor import DumpExecutor, RetryPolicy
-from floorist_spark.sources.jdbc import JdbcQueryRunner, build_jdbc_options, read_query
+from floorist_spark.sources.jdbc import build_jdbc_options, read_query
 from floorist_spark.storage import StorageClient
 
 DERBY_URL = "jdbc:derby:memory:floorist_e2e"
@@ -110,9 +111,9 @@ def test_dialect_types_pass_the_f3_guard_unchanged(spark, derby):
 
 def test_full_dump_path_jdbc_to_partitioned_parquet(spark, derby, tmp_path):
     # The complete reference pipeline on a real connection: floorplan row →
-    # JdbcQueryRunner → DumpExecutor → partitioned gzip parquet.
+    # read_query → DumpExecutor → partitioned gzip parquet.
     storage = StorageClient(spark, f"file://{tmp_path}")
-    runner = JdbcQueryRunner(spark, derby_config())
+    runner = partial(read_query, spark, derby_config())
     ex = DumpExecutor(storage, runner, RetryPolicy(), run_date=RUN_DATE)
 
     row = {"prefix": "dumps/invoices", "query": "SELECT id, name, amt FROM invoices WHERE id <> 2"}
@@ -133,7 +134,7 @@ def test_full_dump_path_jdbc_to_partitioned_parquet(spark, derby, tmp_path):
 def test_jdbc_empty_result_writes_marker_not_parquet(spark, derby, tmp_path):
     # F6 through the live-JDBC path: constant-false query → marker dir.
     storage = StorageClient(spark, f"file://{tmp_path}")
-    runner = JdbcQueryRunner(spark, derby_config())
+    runner = partial(read_query, spark, derby_config())
     ex = DumpExecutor(storage, runner, RetryPolicy(), run_date=RUN_DATE)
     assert ex.execute({"prefix": "dumps/none", "query": "SELECT * FROM invoices WHERE 1=0"}, 1)
     target = str(tmp_path / "dumps/none" / DAY_PATH)
@@ -171,12 +172,6 @@ class FlakyRunner:
             df = df.withColumn("chk", F.lit("ok"))
         return df
 
-    def commit(self):
-        return None
-
-    def rollback(self):
-        return None
-
 
 def test_fault_injection_retry_cleans_partials_and_backs_off(spark, tmp_path):
     storage = StorageClient(spark, f"file://{tmp_path}")
@@ -187,8 +182,6 @@ def test_fault_injection_retry_cleans_partials_and_backs_off(spark, tmp_path):
         runner,
         RetryPolicy(),
         run_date=RUN_DATE,
-        commit=runner.commit,
-        rollback=runner.rollback,
         sleep=sleeps.append,
     )
     target = str(tmp_path / "flaky" / DAY_PATH)
@@ -226,7 +219,7 @@ def test_fault_injection_exhaustion_leaves_failure(spark, tmp_path):
 
 def test_runner_jdbc_mode_end_to_end_via_env(spark, derby, tmp_path, monkeypatch):
     # the reference's whole program shape in jdbc mode — env config →
-    # FlooristSpark → JdbcQueryRunner on a real connection → partitioned
+    # FlooristSpark → read_query on a real connection → partitioned
     # sink — mirroring tests/test_floorist.py:15-220's live-database e2e
     from floorist_spark.config import get_config
     from floorist_spark.runner import FlooristSpark

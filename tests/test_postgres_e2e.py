@@ -40,12 +40,13 @@ import socket
 import subprocess
 import time
 from datetime import date
+from functools import partial
 
 import pytest
 
 from floorist_spark.config import Config
 from floorist_spark.executor import DumpExecutor, RetryPolicy
-from floorist_spark.sources.jdbc import JdbcQueryRunner, jdbc_url, read_query
+from floorist_spark.sources.jdbc import jdbc_url, read_query
 from floorist_spark.storage import StorageClient
 
 RUN_DATE = date(2026, 3, 4)
@@ -230,7 +231,7 @@ def test_pg_exotic_types_survive_the_dump_path(spark, pg_server, seeded, tmp_pat
     # text[] / jsonb / numeric / timestamptz through read -> F3 guard ->
     # partitioned parquet sink, then read back exact.
     storage = StorageClient(spark, f"file://{tmp_path}")
-    runner = JdbcQueryRunner(spark, pg_config(pg_server))
+    runner = partial(read_query, spark, pg_config(pg_server))
     ex = DumpExecutor(storage, runner, RetryPolicy(), run_date=RUN_DATE)
     assert ex.execute(
         {"prefix": "dumps/people", "query": "SELECT * FROM pg_people"}, 1

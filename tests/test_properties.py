@@ -12,12 +12,9 @@ from hypothesis import given
 from hypothesis import strategies as st
 
 from floorist_spark.executor import RETRYABLE_ERROR_PATTERNS, RetryPolicy, RetryResult
-from floorist_spark.floorplan import (
-    DEFAULT_CHUNKSIZE,
-    parse_floorplan,
-    spec_from_row,
-)
+from floorist_spark.floorplan import DEFAULT_CHUNKSIZE, parse_floorplan
 from floorist_spark.functions.textfrag import MERSENNE31, _affine_coef
+from tests.test_executor import FakeStorage, FlakyRunner, make_executor
 
 # printable-ASCII text: the roundtrip property targets floorplan
 # semantics (order, keys, chunksize), not YAML's representation of
@@ -43,23 +40,24 @@ def test_floorplan_roundtrip_preserves_order_and_keys(rows):
 
 @given(_row)
 def test_spec_chunksize_semantics(row):
-    """Missing chunksize → 1000; explicit 0/None → unchunked (None);
-    positive passes through. Mirrors reference row.get('chunksize', 1000)
-    or None (floorist.py:194)."""
+    """Missing prefix/query → that dump fails; missing chunksize → 1000;
+    explicit 0/None → unchunked (None); positive passes through. Mirrors
+    reference row.get('chunksize', 1000) or None (floorist.py:194), run
+    through DumpExecutor.execute."""
+    storage = FakeStorage()
+    ok = make_executor(storage, FlakyRunner()).execute(row, 1)
     if "prefix" not in row or "query" not in row:
-        try:
-            spec_from_row(row)
-            raise AssertionError("expected KeyError")
-        except KeyError:
-            return
-    spec = spec_from_row(row)
+        assert ok is False
+        assert storage.writes == []
+        return
+    assert ok is True
     raw = row.get("chunksize", "MISSING")
     if raw == "MISSING":
-        assert spec.effective_chunksize == DEFAULT_CHUNKSIZE
+        assert storage.writes[0][2] == DEFAULT_CHUNKSIZE
     elif not raw:
-        assert spec.effective_chunksize is None
+        assert storage.writes[0][2] is None
     else:
-        assert spec.effective_chunksize == raw
+        assert storage.writes[0][2] == raw
 
 
 @given(st.integers(min_value=0, max_value=10), st.integers(min_value=1, max_value=60))

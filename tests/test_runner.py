@@ -118,34 +118,6 @@ def test_startup_logs_connected(runner_factory, caplog):
     assert "Successfully connected to the database" in caplog.text
 
 
-def test_parallel_dumps(runner_factory, spark, monkeypatch, caplog):
-    # Spark-native extension: independent dumps run as concurrent Spark
-    # jobs on one session; isolation + exit-code contract unchanged.
-    caplog.set_level(logging.INFO)
-    monkeypatch.setenv("FLOORIST_MAX_PARALLEL_DUMPS", "3")
-    runner, out = runner_factory(PLAN)
-    runner.run()
-    assert spark.read.parquet(
-        f"file://{_day_dir(out, 'exports/values')}"
-    ).count() == 3
-    series_dir = _day_dir(out, "exports/series")
-    assert len([f for f in os.listdir(series_dir) if f.endswith(".parquet")]) == 77
-    assert os.listdir(_day_dir(out, "exports/empty")) == []
-    assert "Dumped 3 from total of 3" in caplog.text
-
-
-def test_parallel_dumps_partial_failure(runner_factory, monkeypatch, caplog):
-    caplog.set_level(logging.INFO)
-    monkeypatch.setenv("FLOORIST_MAX_PARALLEL_DUMPS", "2")
-    runner, out = runner_factory(PLAN_WITH_FAILURE)
-    with pytest.raises(SystemExit) as exc:
-        runner.run()
-    assert exc.value.code == 1
-    assert os.path.isdir(_day_dir(out, "exports/good"))
-    assert os.path.isdir(_day_dir(out, "exports/after"))
-    assert "Dumped 2 from total of 3" in caplog.text
-
-
 def test_catalog_query_export(runner_factory, spark, monkeypatch, caplog):
     # floorplan rows can export any operator-catalog entry by name
     caplog.set_level(logging.INFO)

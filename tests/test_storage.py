@@ -200,9 +200,11 @@ def test_verify_existing_root(storage):
 
 
 def test_verify_missing_root_raises(spark, tmp_path):
-    bad = StorageClient(spark, f"file://{tmp_path}/does/not/exist")
-    with pytest.raises(Exception):
+    uri = f"file://{tmp_path}/does/not/exist"
+    bad = StorageClient(spark, uri)
+    with pytest.raises(ValueError, match="FLOORIST_OUTPUT_URI") as exc:
         bad.verify()
+    assert uri in str(exc.value)
 
 
 class _DeniedFs:
