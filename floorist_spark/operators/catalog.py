@@ -90,7 +90,8 @@ def _with_cache_release(
 #: e/s, so the 21 go thinnest-family-first (lexicographic within a family),
 #: ending q:6 s:5 e:6 m:6 c:6. OUT: the remaining 28 r8 ties and everything
 #: green r9-r11. Staleness bound after this gate runs green: max 12-8 = 4
-#: <= 5.
+#: <= 5. ``python tools/gate_window.py`` prints the next window and round
+#: from the newest committed artifact.
 ROTATION_ROUND = 12
 
 GATE_PRIORITY = [

@@ -27,15 +27,32 @@ from floorist_spark.storage import StorageClient
 
 LOG_FMT = "[%(asctime)s] [%(levelname)s] %(message)s"
 
+#: JVM profile of a cron run: C1 JIT only, and the serial collector. A cron
+#: run is one cold process of 20-30 s, so tiered C2 compilation costs more
+#: CPU than its faster code saves before the process exits, and the serial
+#: collector measured fewer CPU seconds than G1 on top of that; at the
+#: reference's 100m CPU limit those CPU seconds are wall time.
+#: ``defaultJavaOptions`` is prepended to the deployment's own
+#: ``spark.driver.extraJavaOptions``, so those survive, and a later
+#: ``-XX:TieredStopAtLevel=4`` there restores C2. Switching the collector
+#: there takes ``-XX:-UseSerialGC`` too: two selected collectors stop the
+#: JVM at launch.
+CRON_JVM_CONF = {"spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1 -XX:+UseSerialGC"}
+
 
 class FlooristSpark:
     """The engine driver. ``mode="native"`` executes floorplan queries on
     Catalyst over the registered views; ``mode="jdbc"`` pushes them to live
-    PostgreSQL for reference parity (`sources/jdbc.py`)."""
+    PostgreSQL for reference parity (`sources/jdbc.py`).
+
+    Without ``spark`` it launches its own session and JVM with the cron
+    profile ``CRON_JVM_CONF``; a session handed in keeps the JVM it was
+    launched with. Under ``spark-submit`` the JVM exists before the session
+    is built, so the profile does not apply there."""
 
     def __init__(self, config: Config, spark=None):
         self.config = config
-        self.spark = spark or get_spark("floorist_spark", extra_conf=s3a_conf(config))
+        self.spark = spark or get_spark("floorist_spark", extra_conf={**s3a_conf(config), **CRON_JVM_CONF})
 
         self.storage = StorageClient(self.spark, base_output_uri(config))
         self.storage.verify()

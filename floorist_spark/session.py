@@ -14,6 +14,10 @@ but every knob matters identically on a real cluster:
 * Arrow enabled — every pandas UDF / toPandas crosses via Arrow batches.
 * maxPartitionBytes default 128m — at 100 TB that is ~800k input splits,
   which is the right granularity for dynamic allocation.
+
+JVM flags are not set here: a cron run's JVM profile (C1 JIT, serial GC)
+is the runner's ``CRON_JVM_CONF``, passed through ``extra_conf`` only when
+``FlooristSpark`` launches its own session.
 """
 
 from __future__ import annotations

@@ -58,6 +58,43 @@ def _hashable(dt: T.DataType) -> bool:
     return True
 
 
+_MASK32 = 0xFFFFFFFF
+
+
+def _mix(h1: int, k1: int) -> int:
+    """One Murmur3_x86_32 block: mixK1 then mixH1, on unsigned 32-bit ints."""
+    k1 = (k1 * 0xCC9E2D51) & _MASK32
+    k1 = ((k1 << 15) | (k1 >> 17)) & _MASK32
+    k1 = (k1 * 0x1B873593) & _MASK32
+    h1 ^= k1
+    h1 = ((h1 << 13) | (h1 >> 19)) & _MASK32
+    return (h1 * 5 + 0xE6546B64) & _MASK32
+
+
+def spark_hash_long(v: int) -> int:
+    """Spark's ``hash()`` of one LONG value: ``Murmur3_x86_32.hashLong(v,
+    42)``, as a signed 32-bit int. It is the hash ``HashPartitioning`` uses
+    to place a row."""
+    v &= 0xFFFFFFFFFFFFFFFF
+    h1 = _mix(_mix(42, v & _MASK32), v >> 32) ^ 8
+    h1 ^= h1 >> 16
+    h1 = (h1 * 0x85EBCA6B) & _MASK32
+    h1 ^= h1 >> 13
+    h1 = (h1 * 0xC2B2AE35) & _MASK32
+    h1 ^= h1 >> 16
+    return h1 - (1 << 32) if h1 >> 31 else h1
+
+
+def partition_zero_preimage(n: int) -> int:
+    """Smallest nonnegative long v with pmod(hash(v), n) == 0, i.e. a value
+    ``repartition(n, col)`` places in partition 0. Python's ``%`` with a
+    positive divisor is Spark's ``pmod``; the search takes about n steps."""
+    v = 0
+    while spark_hash_long(v) % n:
+        v += 1
+    return v
+
+
 class StorageClient:
     """Hadoop-FS-backed sink rooted at ``base_uri`` (s3a://bucket, file:///dir)."""
 
@@ -191,10 +228,10 @@ class StorageClient:
             # a spurious 0-row file. Remap chunk 0 (always present) to a
             # value that provably lands in partition 0: `hash()` IS the
             # HashPartitioning expression (Murmur3 seed 42), so the
-            # placement pmod(hash(v), n) is computable in-engine. A
+            # placement pmod(hash(v), n) is computable on the driver. A
             # collision with a real chunk id only merges two whole chunks
             # into one task — the file count still telescopes exactly.
-            zero_chunk = self._partition_zero_preimage(n_par)
+            zero_chunk = partition_zero_preimage(n_par)
             chunk = ((rn - F.lit(1)) / F.lit(chunksize)).cast("long")
             return (
                 df.withColumn(
@@ -208,29 +245,6 @@ class StorageClient:
         if df.rdd.getNumPartitions() < n:
             return df.repartition(n)
         return df
-
-    #: session-shared cache of pmod(hash(v), n)==0 preimages, keyed by n
-    _zero_preimages: dict[int, int] = {}
-
-    def _partition_zero_preimage(self, n: int) -> int:
-        """Smallest nonnegative long v with pmod(hash(v), n) == 0, i.e. a
-        value HashPartitioning places in partition 0. One tiny range scan,
-        cached per partition count for the process lifetime."""
-        cached = StorageClient._zero_preimages.get(n)
-        if cached is not None:
-            return cached
-        lo = 0
-        while True:
-            found = (
-                self.spark.range(lo, lo + 8 * n)
-                .where(F.pmod(F.hash(F.col("id")), F.lit(n)) == 0)
-                .agg(F.min("id"))
-                .first()[0]
-            )
-            if found is not None:
-                StorageClient._zero_preimages[n] = int(found)
-                return int(found)
-            lo += 8 * n
 
     def write_empty_marker(self, target: str) -> None:
         """F6: directory marker instead of a Parquet file. On S3A `mkdirs`

@@ -11,8 +11,9 @@ be exactly a stalest-first window under that ledger.
 
 Rotation protocol for future rounds: bump ``ROTATION_ROUND`` in
 ``catalog.py`` and refill ``GATE_PRIORITY`` with the stalest <=49
-entries; these tests fail loudly if either half is forgotten or the
-refill is not actually stalest-first.
+entries (``python tools/gate_window.py`` prints both); these tests fail
+loudly if either half is forgotten or the refill is not actually
+stalest-first.
 """
 
 from __future__ import annotations

@@ -4,14 +4,20 @@ local FS sink, with the reference's isolation/exit-code/log contract
 
 from __future__ import annotations
 
+import json
 import logging
 import os
+import subprocess
+import sys
+import textwrap
 from datetime import date
 
 import pytest
 
 from floorist_spark.config import Config
 from floorist_spark.runner import FlooristSpark
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 PLAN = """
 - prefix: exports/values
@@ -169,3 +175,60 @@ def test_run_date_backfill(runner_factory, spark, monkeypatch):
     )
     assert os.path.isdir(d)
     assert spark.read.parquet(f"file://{d}").count() == 1
+
+
+def test_cron_jvm_profile_reaches_jvm_before_deployment_options(tmp_path):
+    # the test session's JVM already exists, so a JVM that FlooristSpark
+    # launches itself can only be seen from a fresh process
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text(
+        "spark.driver.extraJavaOptions -Dfloorist.probe=1\n"
+    )
+    out = tmp_path / "out"
+    out.mkdir()
+    probe = textwrap.dedent(
+        f"""
+        import json
+        from floorist_spark.config import Config
+        from floorist_spark.runner import FlooristSpark
+
+        engine = FlooristSpark(Config(output_uri="file://{out}", mode="native"))
+        jvm = engine.spark._jvm
+        mx = jvm.java.lang.management.ManagementFactory
+        diag = mx.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+        )
+        print(json.dumps({{
+            "args": list(mx.getRuntimeMXBean().getInputArguments()),
+            "tier": diag.getVMOption("TieredStopAtLevel").getValue(),
+            "serial_gc": diag.getVMOption("UseSerialGC").getValue(),
+        }}))
+        engine.spark.stop()
+        """
+    )
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if not k.startswith("FLOORIST_") and k not in ("SPARK_MASTER", "PYTHONPATH")
+    }
+    env.update(
+        PYTHONPATH=REPO,
+        SPARK_CONF_DIR=str(conf_dir),
+        SPARK_GRAFT_WAREHOUSE=str(tmp_path / "warehouse"),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", probe],
+        env=env,
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    seen = json.loads(proc.stdout.strip().splitlines()[-1])
+    args = seen["args"]
+    assert "-XX:TieredStopAtLevel=1" in args and "-Dfloorist.probe=1" in args, args
+    assert args.index("-XX:TieredStopAtLevel=1") < args.index("-Dfloorist.probe=1")
+    assert seen["tier"] == "1"
+    assert seen["serial_gc"] == "true"

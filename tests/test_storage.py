@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from floorist_spark.storage import StorageClient
+from floorist_spark.storage import StorageClient, partition_zero_preimage, spark_hash_long
 
 
 @pytest.fixture
@@ -102,6 +102,26 @@ def test_parity_writer_is_parallel_with_exact_count(spark, storage):
     _, target = storage.make_path("par13", run_date=date(2026, 1, 2))
     n = storage.write_parquet(df, target, chunksize=13, parity=True)
     assert n == 77  # exact parity through the parallel path
+
+
+def test_partition_zero_preimage_matches_spark_hash(spark):
+    # the parity writer remaps chunk 0 to a value HashPartitioning places in
+    # partition 0, computed on the driver: pin the Python Murmur3 against
+    # F.hash and the placement against pmod, all in one Spark job
+    extremes = [-1, -2, -42, -(2**31), -(2**63), 2**32, 2**32 + 7, 2**40 + 123, 2**63 - 1]
+    preimages = {n: partition_zero_preimage(n) for n in range(1, 1025)}
+    assert max(preimages.values()) <= 8192  # minimality below is pinned too
+    rows = [(v, 1) for v in [*range(0, 8193), *extremes]]
+    rows += [(v, n) for n, v in preimages.items()]
+    got = (
+        spark.createDataFrame(rows, "v long, n int")
+        .select("v", "n", F.hash("v").alias("h"), F.pmod(F.hash("v"), F.col("n")).alias("p"))
+        .collect()
+    )
+    assert all(r.h == spark_hash_long(r.v) for r in got)
+    assert all(r.p == 0 for r in got if r.n > 1)
+    for n, v in preimages.items():
+        assert all(spark_hash_long(u) % n for u in range(v))
 
 
 def test_parity_count_exact_with_map_column(spark, storage):
