@@ -10,7 +10,7 @@
 # Build:  docker build -t floorist-spark .
 # Run:    docker run -e FLOORPLAN_FILE=/tmp/floorplan/floorplan.yaml ... \
 #             floorist-spark
-FROM apache/spark:4.0.0-python3
+FROM apache/spark:4.1.2-python3
 
 USER root
 

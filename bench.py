@@ -383,7 +383,7 @@ def main() -> int:
         errors.pop("x00_dedup_memo_build", None)
         timings["x00_dedup_memo_build"] = best_warm
         wall_all_runs["x00_dedup_memo_build"] = [
-            w for w in (warm, warm2) if w is not None
+            round(w, 3) for w in (warm, warm2) if w is not None
         ]
         print(
             f"  x00_dedup_memo_build: {best_warm:.3f}s"
@@ -462,8 +462,7 @@ def main() -> int:
         print(f"  {name}: {timings[name]:.3f}s{tag}", file=sys.stderr)
 
     # the reference's actual job: the 1M-row dump through the real sink
-    # (BASELINE.md pins 1000 gzip files at chunksize 1000). Parity mode
-    # reproduces the exact file count; scale mode writes in parallel.
+    # (BASELINE.md pins 1000 gzip files at chunksize 1000).
     import shutil
     import tempfile
 
@@ -473,42 +472,39 @@ def main() -> int:
     try:
         storage = StorageClient(spark, f"file://{out}")
         df_1m = qs["q05b_cross_join_1m"](spark, SF_DIR)
-        for key, parity in (("x01_export_1m_parity", True), ("x02_export_1m_scale", False)):
-            # The export entries are disk-bound (1000 gzip files) and
-            # historically swing ~2x between runs on a contended box with
-            # no code change (driver r9 32.2s vs judge re-measure 20.9s vs
-            # builder-local 16.3s, same commit). Run each export twice and
-            # record the min — the steady-state cost, same discipline as
-            # the e26 stream-startup floor probe above.
-            best = None
-            nfiles = None
-            ok_runs = 0
-            for attempt in range(2):
-                _, target = storage.make_path(f"{key}_try{attempt}")
-                t0 = time.time()
-                try:
-                    nfiles = storage.write_parquet(
-                        df_1m, target, chunksize=1000, parity=parity
-                    )
-                except Exception as e:  # noqa: BLE001 — try the other run
-                    errors[key] = f"{type(e).__name__}: {str(e).splitlines()[0][:200]}"
-                    print(f"  {key}: FAILED {errors[key]}", file=sys.stderr)
-                    continue
-                elapsed = time.time() - t0
-                ok_runs += 1
-                wall_all_runs.setdefault(key, []).append(round(elapsed, 3))
-                best = elapsed if best is None else min(best, elapsed)
-            if best is not None:
-                # at least one run succeeded: the entry gets ONE number and
-                # no error record (an entry must never read as both timed
-                # and failed in the same artifact)
-                errors.pop(key, None)
-                timings[key] = round(best, 3)
-                print(
-                    f"  {key}: {timings[key]:.3f}s min-of-{ok_runs}"
-                    f" ({nfiles} files)",
-                    file=sys.stderr,
-                )
+        key = "x01_export_1m_parity"
+        # The export is disk-bound (1000 gzip files) and has swung ~2x
+        # between runs of the same commit on a contended box (32.2s,
+        # 20.9s and 16.3s). Run it twice and record the min — the
+        # steady-state cost, same discipline as the e26 stream-startup
+        # floor probe above.
+        best = None
+        nfiles = None
+        ok_runs = 0
+        for attempt in range(2):
+            _, target = storage.make_path(f"{key}_try{attempt}")
+            t0 = time.time()
+            try:
+                nfiles = storage.write_parquet(df_1m, target, chunksize=1000)
+            except Exception as e:  # noqa: BLE001 — try the other run
+                errors[key] = f"{type(e).__name__}: {str(e).splitlines()[0][:200]}"
+                print(f"  {key}: FAILED {errors[key]}", file=sys.stderr)
+                continue
+            elapsed = time.time() - t0
+            ok_runs += 1
+            wall_all_runs.setdefault(key, []).append(round(elapsed, 3))
+            best = elapsed if best is None else min(best, elapsed)
+        if best is not None:
+            # at least one run succeeded: the entry gets ONE number and
+            # no error record (an entry must never read as both timed
+            # and failed in the same artifact)
+            errors.pop(key, None)
+            timings[key] = round(best, 3)
+            print(
+                f"  {key}: {timings[key]:.3f}s min-of-{ok_runs}"
+                f" ({nfiles} files)",
+                file=sys.stderr,
+            )
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

@@ -14,12 +14,10 @@ Reference semantics reproduced:
   ``%-m/%-d``, `floorist.py:94-97`). Date parts are path literals, not data
   columns — partition values live only in the path (`tests pin this at
   /root/reference/tests/test_floorist.py:166-168`).
-* **F5 write_parquet** — gzip Parquet, append mode, one file per
-  ``chunksize`` rows. Parity mode reproduces the reference's exact file
-  counts (ceil(N/chunksize) — `tests/test_floorist.py:160-188`) via
-  ``coalesce(1)`` + ``maxRecordsPerFile``; scale mode keeps the input
-  partitioning (a 1000-executor cluster writes in parallel) and
-  ``maxRecordsPerFile`` only bounds file size.
+* **F5 write_parquet** — gzip Parquet, append mode, exactly
+  ceil(N/chunksize) files, or one file unchunked (the reference's counts,
+  `tests/test_floorist.py:160-188`). Chunks are written in parallel, each
+  whole in one task (``StorageClient._plan_writer``).
 * **F6 empty-relation sink** — a 0-row (or 0-column) result writes a
   directory marker, NOT a Parquet file (`floorist.py:102-110`; on S3A
   ``mkdirs`` creates exactly the zero-byte trailing-slash object the
@@ -56,43 +54,6 @@ def _hashable(dt: T.DataType) -> bool:
     if isinstance(dt, T.StructType):
         return all(_hashable(f.dataType) for f in dt.fields)
     return True
-
-
-_MASK32 = 0xFFFFFFFF
-
-
-def _mix(h1: int, k1: int) -> int:
-    """One Murmur3_x86_32 block: mixK1 then mixH1, on unsigned 32-bit ints."""
-    k1 = (k1 * 0xCC9E2D51) & _MASK32
-    k1 = ((k1 << 15) | (k1 >> 17)) & _MASK32
-    k1 = (k1 * 0x1B873593) & _MASK32
-    h1 ^= k1
-    h1 = ((h1 << 13) | (h1 >> 19)) & _MASK32
-    return (h1 * 5 + 0xE6546B64) & _MASK32
-
-
-def spark_hash_long(v: int) -> int:
-    """Spark's ``hash()`` of one LONG value: ``Murmur3_x86_32.hashLong(v,
-    42)``, as a signed 32-bit int. It is the hash ``HashPartitioning`` uses
-    to place a row."""
-    v &= 0xFFFFFFFFFFFFFFFF
-    h1 = _mix(_mix(42, v & _MASK32), v >> 32) ^ 8
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & _MASK32
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & _MASK32
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >> 31 else h1
-
-
-def partition_zero_preimage(n: int) -> int:
-    """Smallest nonnegative long v with pmod(hash(v), n) == 0, i.e. a value
-    ``repartition(n, col)`` places in partition 0. Python's ``%`` with a
-    positive divisor is Spark's ``pmod``; the search takes about n steps."""
-    v = 0
-    while spark_hash_long(v) % n:
-        v += 1
-    return v
 
 
 class StorageClient:
@@ -153,15 +114,14 @@ class StorageClient:
         df: DataFrame,
         target: str,
         chunksize: int | None = None,
-        parity: bool = True,
         dump_count: int = 0,
     ) -> int:
-        """Write one dump; returns the number of Parquet files written.
+        """Write one dump; returns the number of Parquet files written:
+        ceil(rows/chunksize), or one file when ``chunksize`` is falsy
+        (`floorist.py:194`: falsy chunksize → one pandas chunk → one file).
 
         Empty (0-row or 0-column) results take the F6 marker path and never
-        invoke the Parquet writer. ``chunksize=None`` means unchunked — a
-        single file in parity mode (`floorist.py:194`: falsy chunksize →
-        one pandas chunk → one file).
+        invoke the Parquet writer.
         """
         if len(df.columns) == 0 or df.isEmpty():
             self.write_empty_marker(target)
@@ -173,9 +133,9 @@ class StorageClient:
         # the chunk logs and the returned count match the reference's
         # per-dump chunk numbers, not the cumulative prefix contents.
         before = set(self.list_parquet_files(target))
-        writer_df = self._plan_writer(df, chunksize, parity)
         (
-            writer_df.write.mode("append")
+            self._plan_writer(df, chunksize)
+            .write.mode("append")
             .option("compression", "gzip")
             .option("maxRecordsPerFile", chunksize or 0)
             .parquet(target)
@@ -185,66 +145,37 @@ class StorageClient:
             logging.info("[Dump #%d] Written parquet chunk #%d", dump_count, chunk)
         return len(files)
 
-    def _plan_writer(self, df: DataFrame, chunksize: int | None, parity: bool) -> DataFrame:
-        """Shape the writer input so the gzip/Parquet encode runs in
-        parallel instead of on one task (optimization guide §2.4/§2.6; was
-        ``coalesce(1)`` in parity mode — the single biggest bench entry).
+    def _plan_writer(self, df: DataFrame, chunksize: int | None) -> DataFrame:
+        """Shape the writer input so the file count is exact and the
+        gzip/Parquet encode of a chunked dump runs on ~cores tasks.
 
-        Parity mode must still land EXACTLY ceil(N/chunksize) files. With
-        ``maxRecordsPerFile`` each write task emits ceil(rows_in_task /
-        chunksize) files, so the total equals the parity count iff every
-        task holds a whole number of chunks with at most one task carrying
-        the single global partial chunk. Assign each row a global chunk id
-        (row_number over a deterministic total order — xxhash64 of the row,
-        so a retried stage reproduces the same assignment, SPARK-38388
-        class) and hash-repartition on that id: each chunk lands whole in
-        one task, only the last chunk is partial, and the count telescopes
-        back to ceil(N/chunksize) while ~cores tasks encode concurrently.
-        The row_number pass IS single-partition, but it only shuffles and
-        numbers rows — the expensive part (gzip + Parquet encode) is what
-        gets parallelized. At real scale the parity contract itself is the
-        serial constraint; scale mode below is the 100 TB path.
-
-        Scale mode keeps the input partitioning (a well-partitioned
-        cluster input already writes in parallel) and only spreads when the
-        input arrives BELOW the session's parallelism (e.g. a single-file
-        local scan or a broadcast-join result) — scale-adaptive, a no-op on
-        a properly partitioned cluster.
+        Unchunked is one file, so one task (``coalesce(1)``). Chunked, each
+        write task emits ceil(rows_in_task / chunksize) files under
+        ``maxRecordsPerFile``, so the total is ceil(N/chunksize) iff every
+        task holds whole chunks and only one holds the partial last chunk.
+        Each row gets a global chunk id from a row_number over a
+        deterministic order (xxhash64 of the row, so a retried stage
+        reproduces the assignment, SPARK-38388 class), and chunk ``c`` is
+        placed in partition ``c mod n``. ``FileFormatWriter`` always writes
+        a file from task 0, even an empty one, so chunk 0 must live there;
+        ``c mod n`` puts it there. The row_number pass is single-partition,
+        but it only numbers rows: the encode is what runs in parallel.
         """
-        if parity:
-            if not chunksize:
-                return df.coalesce(1)  # one-file contract: inherently serial
-            order = (
-                F.xxhash64(*df.columns)
-                if all(_hashable(f.dataType) for f in df.schema.fields)
-                else F.lit(1)  # map-typed rows: count-correct, order-arbitrary
-            )
-            rn = F.row_number().over(Window.orderBy(order))
-            tag = "__floorist_chunk__"
-            n_par = self.spark.sparkContext.defaultParallelism
-            # Spark's FileFormatWriter makes TASK 0 write a file even when
-            # its iterator is empty (schema preservation for empty jobs) —
-            # so if no chunk hashes into partition 0 the parity count gains
-            # a spurious 0-row file. Remap chunk 0 (always present) to a
-            # value that provably lands in partition 0: `hash()` IS the
-            # HashPartitioning expression (Murmur3 seed 42), so the
-            # placement pmod(hash(v), n) is computable on the driver. A
-            # collision with a real chunk id only merges two whole chunks
-            # into one task — the file count still telescopes exactly.
-            zero_chunk = partition_zero_preimage(n_par)
-            chunk = ((rn - F.lit(1)) / F.lit(chunksize)).cast("long")
-            return (
-                df.withColumn(
-                    tag,
-                    F.when(chunk == 0, F.lit(zero_chunk)).otherwise(chunk),
-                )
-                .repartition(n_par, F.col(tag))
-                .drop(tag)
-            )
+        if not chunksize:
+            return df.coalesce(1)
+        order = (
+            F.xxhash64(*df.columns)
+            if all(_hashable(f.dataType) for f in df.schema.fields)
+            else F.lit(1)  # map-typed rows: count-correct, order-arbitrary
+        )
+        chunk = ((F.row_number().over(Window.orderBy(order)) - 1) / chunksize).cast("long")
         n = self.spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < n:
-            return df.repartition(n)
-        return df
+        tag = "__floorist_chunk__"
+        return (
+            df.withColumn(tag, F.pmod(chunk, F.lit(n)).cast("int"))
+            .repartitionById(n, tag)
+            .drop(tag)
+        )
 
     def write_empty_marker(self, target: str) -> None:
         """F6: directory marker instead of a Parquet file. On S3A `mkdirs`

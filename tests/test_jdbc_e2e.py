@@ -127,7 +127,7 @@ def test_full_dump_path_jdbc_to_partitioned_parquet(spark, derby, tmp_path):
         (3, "gamma", "99.99"),
     ]
     files = storage.list_parquet_files(f"file://{target}")
-    assert len(files) == 1  # parity mode, chunksize 1000 > 2 rows
+    assert len(files) == 1  # chunksize 1000 > 2 rows: one chunk, one file
     assert all(".gz.parquet" in os.path.basename(f) for f in files)
 
 

@@ -122,7 +122,7 @@ def test_f5_chunk_parity_holds_on_object_store(spark, s3):
     # reference contract (test_floorist.py:171-178) on real PUTs.
     _, target = s3.make_path("dumps/series", RUN_DATE)
     df = spark.range(1000).selectExpr("id AS n")
-    n = s3.write_parquet(df, target, chunksize=77, parity=True)
+    n = s3.write_parquet(df, target, chunksize=77)
     assert n == -(-1000 // 77)
     back = spark.read.parquet(target)
     assert back.count() == 1000

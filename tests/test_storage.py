@@ -8,10 +8,11 @@ import os
 from datetime import date
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from floorist_spark.storage import StorageClient, partition_zero_preimage, spark_hash_long
+from floorist_spark.storage import StorageClient
 
 
 @pytest.fixture
@@ -45,7 +46,7 @@ def test_chunksize_13_over_1000_rows_gives_77_files(spark, storage):
     # reference tests/test_floorist.py:170-178
     df = spark.range(0, 1000).select(F.col("id").alias("n"))
     _, target = storage.make_path("chunk13", run_date=date(2026, 1, 2))
-    n = storage.write_parquet(df, target, chunksize=13, parity=True)
+    n = storage.write_parquet(df, target, chunksize=13)
     assert n == 77
     assert len(storage.list_parquet_files(target)) == 77
 
@@ -54,7 +55,7 @@ def test_chunksize_none_gives_single_file(spark, storage):
     # reference tests/test_floorist.py:180-188 (chunksize 0 -> falsy -> one file)
     df = spark.range(0, 1000).select(F.col("id").alias("n"))
     _, target = storage.make_path("chunk0", run_date=date(2026, 1, 2))
-    n = storage.write_parquet(df, target, chunksize=None, parity=True)
+    n = storage.write_parquet(df, target, chunksize=None)
     assert n == 1
 
 
@@ -66,7 +67,7 @@ def test_million_rows_chunksize_1000_gives_1000_files(spark, storage):
     y = spark.range(0, 1000).select(F.col("id").alias("y"))
     df = x.crossJoin(y)
     _, target = storage.make_path("large", run_date=date(2026, 1, 2))
-    n = storage.write_parquet(df, target, chunksize=1000, parity=True)
+    n = storage.write_parquet(df, target, chunksize=1000)
     assert n == 1000
     back = spark.read.parquet(target)
     assert back.count() == 1_000_000
@@ -92,36 +93,83 @@ def test_gzip_compression(spark, storage):
 
 
 def test_parity_writer_is_parallel_with_exact_count(spark, storage):
-    # r11 optimization: parity mode no longer funnels the gzip/Parquet
-    # encode through coalesce(1) — the writer input is hash-partitioned by
-    # a deterministic global chunk id, so >1 task encodes concurrently
-    # while the file count stays EXACTLY ceil(N/chunksize).
+    # the chunked writer does not funnel the gzip/Parquet encode through
+    # coalesce(1): rows are placed by a deterministic global chunk id, so
+    # >1 task encodes concurrently while the file count stays EXACTLY
+    # ceil(N/chunksize).
     df = spark.range(0, 1000).select(F.col("id").alias("n"))
-    planned = storage._plan_writer(df, 13, parity=True)
+    planned = storage._plan_writer(df, 13)
     assert planned.rdd.getNumPartitions() > 1
     _, target = storage.make_path("par13", run_date=date(2026, 1, 2))
-    n = storage.write_parquet(df, target, chunksize=13, parity=True)
+    n = storage.write_parquet(df, target, chunksize=13)
     assert n == 77  # exact parity through the parallel path
 
 
-def test_partition_zero_preimage_matches_spark_hash(spark):
-    # the parity writer remaps chunk 0 to a value HashPartitioning places in
-    # partition 0, computed on the driver: pin the Python Murmur3 against
-    # F.hash and the placement against pmod, all in one Spark job
-    extremes = [-1, -2, -42, -(2**31), -(2**63), 2**32, 2**32 + 7, 2**40 + 123, 2**63 - 1]
-    preimages = {n: partition_zero_preimage(n) for n in range(1, 1025)}
-    assert max(preimages.values()) <= 8192  # minimality below is pinned too
-    rows = [(v, 1) for v in [*range(0, 8193), *extremes]]
-    rows += [(v, n) for n, v in preimages.items()]
-    got = (
-        spark.createDataFrame(rows, "v long, n int")
-        .select("v", "n", F.hash("v").alias("h"), F.pmod(F.hash("v"), F.col("n")).alias("p"))
-        .collect()
-    )
-    assert all(r.h == spark_hash_long(r.v) for r in got)
-    assert all(r.p == 0 for r in got if r.n > 1)
-    for n, v in preimages.items():
-        assert all(spark_hash_long(u) % n for u in range(v))
+def test_parity_chunks_land_whole_with_chunk_zero_in_partition_zero(spark, storage):
+    # the file count telescopes to ceil(N/chunksize) only if every chunk
+    # lies whole in one write task and task 0 (which always writes a file)
+    # holds chunk 0. Chunk counts around the partition count, one collect;
+    # each row's chunk is recomputed from the writer's documented order
+    # (xxhash64 of the row) after the partition id is taken.
+    n = spark.sparkContext.defaultParallelism
+    chunksize = 5
+    cases = sorted({1, max(n - 1, 1), n, n + 1, 77})
+    placed = None
+    for chunks in cases:
+        df = spark.range(0, chunks * chunksize - 2).select(F.col("id").alias("n"))
+        part = (
+            storage._plan_writer(df, chunksize)
+            .select("n", F.spark_partition_id().alias("pid"))
+            .select(
+                F.lit(chunks).alias("case"),
+                "pid",
+                ((F.row_number().over(Window.orderBy(F.xxhash64("n"))) - 1) / chunksize)
+                .cast("long")
+                .alias("chunk"),
+            )
+        )
+        placed = part if placed is None else placed.unionByName(part)
+    got = placed.groupBy("case", "pid", "chunk").count().collect()
+    for chunks in cases:
+        pids = {}
+        for r in got:
+            if r.case == chunks:
+                pids.setdefault(r.chunk, set()).add(r.pid)
+        assert sorted(pids) == list(range(chunks))  # every chunk is present
+        assert all(len(p) == 1 for p in pids.values())  # ...whole in one task
+        assert pids[0] == {0}  # chunk 0 in partition 0
+    df = spark.range(0, (n + 1) * chunksize - 2)
+    _, target = storage.make_path("placed", run_date=date(2026, 1, 2))
+    assert storage.write_parquet(df, target, chunksize=chunksize) == n + 1
+
+
+def test_parity_write_keeps_rows_with_duplicates_nulls_and_maps(spark, storage):
+    # the parity checks above count files; this one checks what is in them:
+    # duplicate rows, NULLs and a MapType column (no xxhash64 order)
+    # round-trip as the same multiset of rows
+    data = [
+        (
+            None if i % 100 == 0 else i % 100,
+            None if i % 7 == 0 else f"s{i % 100 // 3}",
+            None if i % 11 == 0 else {"k": i % 100, "j": i % 3},
+        )
+        for i in range(1000)
+    ]
+    df = spark.createDataFrame(data, "n int, s string, m map<string,int>")
+    _, target = storage.make_path("content13", run_date=date(2026, 1, 2))
+    assert storage.write_parquet(df, target, chunksize=13) == 77
+    assert len(storage.list_parquet_files(target)) == 77
+
+    def key(row):
+        n, s, m = row
+        return (
+            (n is None, n or 0),
+            (s is None, s or ""),
+            (m is None, sorted(m.items()) if m else []),
+        )
+
+    back = [(r.n, r.s, r.m) for r in spark.read.parquet(target).select("n", "s", "m").collect()]
+    assert sorted(back, key=key) == sorted(data, key=key)
 
 
 def test_parity_count_exact_with_map_column(spark, storage):
@@ -131,32 +179,9 @@ def test_parity_count_exact_with_map_column(spark, storage):
         F.col("id").alias("n"), F.create_map(F.lit("k"), F.col("id")).alias("m")
     )
     _, target = storage.make_path("parmap", run_date=date(2026, 1, 2))
-    n = storage.write_parquet(df, target, chunksize=30, parity=True)
+    n = storage.write_parquet(df, target, chunksize=30)
     assert n == 4  # ceil(100/30)
     assert spark.read.parquet(target).count() == 100
-
-
-def test_scale_mode_spreads_single_partition_input(spark, storage):
-    # scale-adaptive: input arriving below session parallelism (e.g. a
-    # single-file scan) is spread so the write runs in parallel; input at
-    # or above parallelism keeps its partitioning (cluster no-op).
-    one = spark.range(0, 100).coalesce(1)
-    spread = storage._plan_writer(one, None, parity=False)
-    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    wide = spark.range(0, 100).repartition(
-        spark.sparkContext.defaultParallelism + 3
-    )
-    kept = storage._plan_writer(wide, None, parity=False)
-    assert kept.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism + 3
-
-
-def test_scale_mode_respects_max_records_per_file(spark, storage):
-    # scale mode: no coalesce, but files still bounded by chunksize
-    df = spark.range(0, 1000).repartition(4).select(F.col("id").alias("n"))
-    _, target = storage.make_path("scale", run_date=date(2026, 1, 2))
-    n = storage.write_parquet(df, target, chunksize=100, parity=False)
-    assert n >= 10  # >= ceil(1000/100); parallel writers may split more
-    assert spark.read.parquet(target).count() == 1000
 
 
 # -- F6: empty-relation marker -------------------------------------------------
@@ -270,8 +295,8 @@ def test_append_schema_evolution_readback_contract(spark, storage):
     target = f"{storage.base_uri}/evolved"
     run1 = spark.range(3).selectExpr("id AS a")
     run2 = spark.range(3, 5).selectExpr("id AS a", "id * 10 AS b")
-    storage.write_parquet(run1, target, parity=True)
-    storage.write_parquet(run2, target, parity=True)
+    storage.write_parquet(run1, target)
+    storage.write_parquet(run2, target)
 
     merged = spark.read.option("mergeSchema", "true").parquet(target)
     assert sorted(c.lower() for c in merged.columns) == ["a", "b"]

@@ -7,8 +7,8 @@ Usage::
 
 Writes ``plans/<tag>/<entry>_<suffix>.txt`` (tag from $SPARK_GRAFT_PLANS_TAG, default r12) — the optimization-round evidence
 files the judge diffs against the prose claims in OPTIMIZATION_r11.md.
-Entries that drive the sink directly (x01/x02 exports) are captured via the
-DataFrame they export (q05b), tagged accordingly.
+The entry that drives the sink directly (the x01 export) is captured via the
+DataFrame it exports (q05b), tagged accordingly.
 """
 
 from __future__ import annotations

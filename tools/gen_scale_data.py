@@ -4,7 +4,7 @@ item 5).
 The driver's testdata generator is not available to the builder and
 /root/testdata is read-only, so this tool synthesizes ONLY the two
 tables the five heaviest bench entries read (x00/t15/d23 → documents,
-e26 → events; x01/x02 are range-based), with schema identical to the
+e26 → events; x01 is range-based), with schema identical to the
 shipped tables and distributions matched empirically to sf0.1
 (TESTDATA.md profile, measured 2026-08-18):
 
