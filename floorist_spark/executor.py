@@ -1,11 +1,10 @@
-"""Retry policy + per-dump executor (SURVEY §2 F7, F8, F9, F10).
+"""Retry rule + per-dump executor (SURVEY §2 F7, F8, F9, F10).
 
 Reference semantics (`/root/reference/src/floorist/floorist.py`):
 
-* **F8 RetryPolicy** — an error is retryable iff its string form contains
-  one of the known transient-database patterns; backoff is
-  ``base_delay * 2**attempt`` (5s, 10s with the defaults); 3 attempts total
-  (`floorist.py:21-23,31-63`, pinned by
+* **F8 retry** — one rule, ``is_retryable``: a transient database error is
+  retried with backoff ``RETRY_DELAY * 2**attempt`` (5s, 10s), 3 attempts
+  total (`floorist.py:21-23,31-63`, pinned by
   `tests/test_floorist_standalone.py:219-222`).
 * **F7 cleanup-before-retry** — every retry first deletes the target prefix
   so re-running the full query cannot duplicate rows; if the cleanup itself
@@ -19,12 +18,15 @@ Reference semantics (`/root/reference/src/floorist/floorist.py`):
   parse error: it fails that dump only and later dumps still run
   (`floorist.py:186-197`, `tests/test_floorist.py:190-198`).
 
-Design deviation, documented: the reference only enters the retry path for
-SQLAlchemy ``OperationalError``/``PendingRollbackError`` (`floorist.py:
-221-224`) — on Spark the transient errors surface as Py4J-wrapped
-exceptions of many classes, so classification here is purely
-pattern-on-message (same pattern list). Non-matching errors fail
-immediately, exactly as in the reference.
+Design deviation, documented: the reference matches message patterns on
+SQLAlchemy errors (`floorist.py:221-224`). Through Spark's JDBC source a
+driver error arrives Py4J-wrapped, matching no pattern, with the driver's
+``java.sql.SQLException`` in its Java cause chain. So its SQLSTATE decides
+first, and only an error without one falls back to the reference's
+patterns. A SQLSTATE outside ``RETRYABLE_SQLSTATES`` fails at once even if
+its message matches: 57P04 (database dropped), whose message reads
+"terminating connection due to conflict with recovery", does not retry;
+the other recovery conflicts carry 40001 and do.
 """
 
 from __future__ import annotations
@@ -33,8 +35,9 @@ import logging
 import time
 from collections.abc import Callable
 from datetime import date
-from enum import Enum
 
+from py4j.java_gateway import is_instance_of
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 from floorist_spark.floorplan import DEFAULT_CHUNKSIZE
@@ -52,40 +55,33 @@ RETRYABLE_ERROR_PATTERNS = (
     "invalid transaction",
 )
 
+#: Transient SQLSTATEs (PostgreSQL Appendix A): serialization failure, deadlock,
+#: admin/crash shutdown, cannot connect now, and class 08's lost connections
+#: (not 08004, a refused login, nor 08P01, a protocol violation: no retry mends them).
+RETRYABLE_SQLSTATES = ("40001", "40P01", "57P01", "57P02", "57P03", "08000", "08001", "08003", "08006", "08007")
 
-class RetryResult(Enum):
-    RETRY = "retry"
-    FAILURE = "failure"
-    EXHAUSTED = "exhausted"
 
-
-class RetryPolicy:
-    """F8: substring classification + exponential backoff
-    (`floorist.py:45-63`)."""
-
-    def __init__(self, max_retries: int = MAX_RETRIES, base_delay: float = RETRY_DELAY):
-        self.max_retries = max_retries
-        self.base_delay = base_delay
-
-    def evaluate(self, ex: Exception, attempt: int) -> RetryResult:
-        if not self.is_retryable(ex):
-            return RetryResult.FAILURE
-        if attempt >= self.max_retries - 1:
-            return RetryResult.EXHAUSTED
-        return RetryResult.RETRY
-
-    def backoff_delay(self, attempt: int) -> float:
-        return self.base_delay * (2**attempt)
-
-    @staticmethod
-    def is_retryable(ex: Exception) -> bool:
-        text = str(ex)
-        return any(p in text for p in RETRYABLE_ERROR_PATTERNS)
+def is_retryable(ex: Exception) -> bool:
+    """F8: the first SQLSTATE on a ``java.sql.SQLException`` in the Java
+    cause chain decides; without one, the message patterns do."""
+    link = getattr(ex, "java_exception", None)
+    for _ in range(8):
+        if link is None:
+            break
+        # a py4j JavaObject answers hasattr for any name: test the class
+        if is_instance_of(SparkContext._gateway, link, "java.sql.SQLException"):
+            state = link.getSQLState()
+            if state:
+                return state in RETRYABLE_SQLSTATES
+        link = link.getCause()
+    return any(p in str(ex) for p in RETRYABLE_ERROR_PATTERNS)
 
 
 class DumpExecutor:
     """F10: orchestrate path → query → sink per floorplan row, with
-    retry/cleanup semantics (`floorist.py:159-256`).
+    retry/cleanup semantics (`floorist.py:159-256`): up to ``MAX_RETRIES``
+    attempts while ``is_retryable`` holds, each retry after a cleanup of
+    the target and a ``sleep`` of ``RETRY_DELAY * 2**attempt``.
 
     ``query_runner`` builds the DataFrame for a SQL string — ``spark.sql``
     in native mode, a JDBC read in jdbc mode. The DataFrame is lazy; the
@@ -98,13 +94,11 @@ class DumpExecutor:
         self,
         storage: StorageClient,
         query_runner: Callable[[str], DataFrame],
-        retry_policy: RetryPolicy | None = None,
         run_date: date | None = None,
         sleep: Callable[[float], None] = time.sleep,
     ):
         self.storage = storage
         self.query_runner = query_runner
-        self.retry_policy = retry_policy or RetryPolicy()
         self.run_date = run_date
         self.sleep = sleep
 
@@ -121,14 +115,14 @@ class DumpExecutor:
             logging.exception("[Dump #%d] %s", dump_count, ex)
             return False
 
-        for attempt in range(self.retry_policy.max_retries):
+        for attempt in range(MAX_RETRIES):
             try:
                 if attempt > 0:
                     logging.info(
                         "[Dump #%d] Retry %d of %d (attempt %d total)",
                         dump_count,
                         attempt,
-                        self.retry_policy.max_retries - 1,
+                        MAX_RETRIES - 1,
                         attempt + 1,
                     )
                     try:
@@ -147,15 +141,14 @@ class DumpExecutor:
 
             except Exception as ex:
                 logging.warning("[Dump #%d] Database error, rolling back", dump_count)
-                result = self.retry_policy.evaluate(ex, attempt)
-                if result == RetryResult.FAILURE:
+                if not is_retryable(ex):
                     logging.exception("[Dump #%d] %s", dump_count, ex)
                     break
-                if result == RetryResult.EXHAUSTED:
+                if attempt == MAX_RETRIES - 1:
                     logging.exception("[Dump #%d] Retries exhausted %s", dump_count, ex)
                     break
 
-                backoff = self.retry_policy.backoff_delay(attempt)
+                backoff = RETRY_DELAY * 2**attempt
                 logging.warning(
                     "[Dump #%d] Retrying in %d seconds due to: %s",
                     dump_count,

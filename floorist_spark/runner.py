@@ -20,7 +20,7 @@ from functools import partial
 from os import environ
 
 from floorist_spark.config import Config, base_output_uri, get_config, s3a_conf
-from floorist_spark.executor import DumpExecutor, RetryPolicy
+from floorist_spark.executor import DumpExecutor
 from floorist_spark.floorplan import load_floorplan
 from floorist_spark.session import get_spark, register_views
 from floorist_spark.storage import StorageClient
@@ -92,7 +92,7 @@ class FlooristSpark:
         if environ.get("FLOORIST_RUN_DATE"):
             run_date = date.fromisoformat(environ["FLOORIST_RUN_DATE"])
 
-        self.executor = DumpExecutor(self.storage, runner, RetryPolicy(), run_date=run_date)
+        self.executor = DumpExecutor(self.storage, runner, run_date=run_date)
 
     def run(self) -> None:
         """F11: run the dumps in floorplan order, each isolated from the

@@ -17,7 +17,8 @@ Reference semantics reproduced:
 * **F5 write_parquet** — gzip Parquet, append mode, exactly
   ceil(N/chunksize) files, or one file unchunked (the reference's counts,
   `tests/test_floorist.py:160-188`). Chunks are written in parallel, each
-  whole in one task (``StorageClient._plan_writer``).
+  whole in one task (``StorageClient._plan_writer``), so the write's own
+  row count gives its file count.
 * **F6 empty-relation sink** — a 0-row (or 0-column) result writes a
   directory marker, NOT a Parquet file (`floorist.py:102-110`; on S3A
   ``mkdirs`` creates exactly the zero-byte trailing-slash object the
@@ -39,7 +40,7 @@ import os
 from datetime import date
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -116,9 +117,12 @@ class StorageClient:
         chunksize: int | None = None,
         dump_count: int = 0,
     ) -> int:
-        """Write one dump; returns the number of Parquet files written:
+        """Write one dump; returns the number of Parquet files it wrote:
         ceil(rows/chunksize), or one file when ``chunksize`` is falsy
         (`floorist.py:194`: falsy chunksize → one pandas chunk → one file).
+        The number is derived, not listed: ``_plan_writer`` makes it exact,
+        and ``rows`` is observed in this write's own result stage, so files
+        already under an append-mode prefix do not count.
 
         Empty (0-row or 0-column) results take the F6 marker path and never
         invoke the Parquet writer.
@@ -128,22 +132,15 @@ class StorageClient:
             logging.info("[Dump #%d] Empty folder created for empty result", dump_count)
             return 0
 
-        # Append mode can land on a prefix holding files from earlier dumps;
-        # count only what THIS write produced (before/after listing diff), so
-        # the chunk logs and the returned count match the reference's
-        # per-dump chunk numbers, not the cumulative prefix contents.
-        before = set(self.list_parquet_files(target))
-        (
-            self._plan_writer(df, chunksize)
-            .write.mode("append")
-            .option("compression", "gzip")
-            .option("maxRecordsPerFile", chunksize or 0)
-            .parquet(target)
-        )
-        files = [f for f in self.list_parquet_files(target) if f not in before]
-        for chunk in range(1, len(files) + 1):
+        planned = self._plan_writer(df, chunksize)
+        written = Observation()
+        if chunksize:  # unchunked is one file: nothing to count
+            planned = planned.observe(written, F.count(F.lit(1)).alias("rows"))
+        planned.write.mode("append").options(compression="gzip", maxRecordsPerFile=chunksize or 0).parquet(target)
+        files = -(-written.get["rows"] // chunksize) if chunksize else 1
+        for chunk in range(1, files + 1):
             logging.info("[Dump #%d] Written parquet chunk #%d", dump_count, chunk)
-        return len(files)
+        return files
 
     def _plan_writer(self, df: DataFrame, chunksize: int | None) -> DataFrame:
         """Shape the writer input so the file count is exact and the
@@ -201,26 +198,7 @@ class StorageClient:
     def list_parquet_files(self, target: str) -> list[str]:
         """Recursive listing of data files under ``target`` (excludes
         _SUCCESS and hidden files) — the test surface for chunk-count
-        parity (`tests/test_floorist.py:160-188`).
-
-        ``file:`` URIs walk the tree in-process: the generic Hadoop
-        ``listFiles`` RemoteIterator costs ~5 py4j round trips per file
-        (measured 7.3s for a 1000-file export — driver-side overhead half
-        as large as the write itself, guide §5/§7.3). Remote schemes (s3a)
-        keep the Hadoop path, where the round trips are to the store, not
-        py4j."""
-        parsed = urlparse(target)
-        if parsed.scheme in ("", "file"):
-            base = parsed.path
-            if not os.path.isdir(base):
-                return []
-            out: list[str] = []
-            for root_dir, _dirs, files in os.walk(base):
-                for name in files:
-                    if not name.startswith("_") and not name.startswith("."):
-                        # Hadoop Path renders local URIs as file:/abs/path
-                        out.append("file:" + os.path.join(root_dir, name))
-            return sorted(out)
+        parity (`tests/test_floorist.py:160-188`)."""
         fs = self._fs(target)
         root = self._jpath(target)
         if not fs.exists(root):

@@ -7,7 +7,7 @@ from datetime import date
 
 import pytest
 
-from floorist_spark.executor import DumpExecutor, RetryPolicy, RetryResult
+from floorist_spark.executor import DumpExecutor, is_retryable
 from floorist_spark.floorplan import DEFAULT_CHUNKSIZE, parse_floorplan
 
 
@@ -53,7 +53,6 @@ def make_executor(storage, runner, sleeps=None):
     return DumpExecutor(
         storage,
         runner,
-        RetryPolicy(),
         run_date=date(2026, 1, 2),
         sleep=(sleeps.append if sleeps is not None else lambda s: None),
     )
@@ -62,7 +61,7 @@ def make_executor(storage, runner, sleeps=None):
 ROW = {"prefix": "data/x", "query": "SELECT 1 AS a"}
 
 
-# -- RetryPolicy (F8) ----------------------------------------------------------
+# -- is_retryable (F8) ---------------------------------------------------------
 
 @pytest.mark.parametrize(
     "message",
@@ -74,27 +73,62 @@ ROW = {"prefix": "data/x", "query": "SELECT 1 AS a"}
     ],
 )
 def test_retryable_patterns(message):
-    assert RetryPolicy.is_retryable(Exception(message))
+    assert is_retryable(Exception(message))
 
 
 def test_non_retryable():
-    assert not RetryPolicy.is_retryable(Exception("syntax error at or near"))
+    assert not is_retryable(Exception("syntax error at or near"))
 
 
 def test_backoff_schedule_is_5_then_10():
     # pinned by reference tests/test_floorist_standalone.py:219-222
-    p = RetryPolicy()
-    assert p.backoff_delay(0) == 5
-    assert p.backoff_delay(1) == 10
+    runner = FlakyRunner([Exception("SerializationFailure")] * 2)
+    sleeps: list[float] = []
+    assert make_executor(FakeStorage(), runner, sleeps).execute(ROW, 1) is True
+    assert runner.calls == 3
+    assert sleeps == [5, 10]
 
 
 def test_evaluate_transitions():
-    p = RetryPolicy(max_retries=3)
-    retryable = Exception("SerializationFailure")
-    assert p.evaluate(retryable, 0) == RetryResult.RETRY
-    assert p.evaluate(retryable, 1) == RetryResult.RETRY
-    assert p.evaluate(retryable, 2) == RetryResult.EXHAUSTED
-    assert p.evaluate(Exception("boom"), 0) == RetryResult.FAILURE
+    # retry, retry, exhausted: three attempts, then the dump fails
+    runner = FlakyRunner([Exception("SerializationFailure")] * 3)
+    sleeps: list[float] = []
+    assert make_executor(FakeStorage(), runner, sleeps).execute(ROW, 1) is False
+    assert runner.calls == 3
+    assert sleeps == [5, 10]
+    # a non-retryable error fails at once
+    runner = FlakyRunner([Exception("boom")])
+    sleeps = []
+    assert make_executor(FakeStorage(), runner, sleeps).execute(ROW, 1) is False
+    assert runner.calls == 1
+    assert sleeps == []
+
+
+@pytest.mark.parametrize(
+    "state, message, retry",
+    [
+        ("40001", "could not serialize access", True),
+        ("40P01", "deadlock detected", True),
+        ("57P01", "terminating connection", True),
+        ("08006", "connection failure", True),
+        ("08P01", "protocol violation", False),  # class 08, but not a lost connection
+        ("57P04", "terminating connection due to conflict with recovery", False),
+        ("42P01", "SerializationFailure", False),  # the SQLSTATE wins
+        ("22003", "numeric field overflow", False),
+        (None, "SerializationFailure", True),  # no SQLSTATE: the patterns
+        (None, "could not serialize access", False),
+    ],
+)
+def test_sqlstate_in_java_cause_chain_decides(spark, state, message, retry):
+    # the shape a JDBC task failure reaches Python in: a Py4JJavaError
+    # whose SparkException holds the driver's SQLException as its cause
+    jvm = spark._jvm
+    cause = jvm.java.sql.SQLException("pgwire: " + message, state)
+
+    class Py4JLike(Exception):
+        java_exception = jvm.org.apache.spark.SparkException("Job aborted", cause)
+
+    assert is_retryable(Py4JLike(message)) is retry
 
 
 # -- DumpExecutor (F10) ----------------------------------------------------------

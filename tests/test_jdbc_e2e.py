@@ -30,7 +30,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from floorist_spark.config import Config
-from floorist_spark.executor import DumpExecutor, RetryPolicy
+from floorist_spark.executor import DumpExecutor
 from floorist_spark.sources.jdbc import build_jdbc_options, read_query
 from floorist_spark.storage import StorageClient
 
@@ -114,7 +114,7 @@ def test_full_dump_path_jdbc_to_partitioned_parquet(spark, derby, tmp_path):
     # read_query → DumpExecutor → partitioned gzip parquet.
     storage = StorageClient(spark, f"file://{tmp_path}")
     runner = partial(read_query, spark, derby_config())
-    ex = DumpExecutor(storage, runner, RetryPolicy(), run_date=RUN_DATE)
+    ex = DumpExecutor(storage, runner, run_date=RUN_DATE)
 
     row = {"prefix": "dumps/invoices", "query": "SELECT id, name, amt FROM invoices WHERE id <> 2"}
     assert ex.execute(row, 1) is True
@@ -135,7 +135,7 @@ def test_jdbc_empty_result_writes_marker_not_parquet(spark, derby, tmp_path):
     # F6 through the live-JDBC path: constant-false query → marker dir.
     storage = StorageClient(spark, f"file://{tmp_path}")
     runner = partial(read_query, spark, derby_config())
-    ex = DumpExecutor(storage, runner, RetryPolicy(), run_date=RUN_DATE)
+    ex = DumpExecutor(storage, runner, run_date=RUN_DATE)
     assert ex.execute({"prefix": "dumps/none", "query": "SELECT * FROM invoices WHERE 1=0"}, 1)
     target = str(tmp_path / "dumps/none" / DAY_PATH)
     assert os.path.isdir(target)
@@ -180,7 +180,6 @@ def test_fault_injection_retry_cleans_partials_and_backs_off(spark, tmp_path):
     ex = DumpExecutor(
         storage,
         runner,
-        RetryPolicy(),
         run_date=RUN_DATE,
         sleep=sleeps.append,
     )
@@ -209,7 +208,7 @@ def test_fault_injection_exhaustion_leaves_failure(spark, tmp_path):
     storage = StorageClient(spark, f"file://{tmp_path}")
     runner = FlakyRunner(spark, fail_times=99)
     sleeps: list[float] = []
-    ex = DumpExecutor(storage, runner, RetryPolicy(), run_date=RUN_DATE, sleep=sleeps.append)
+    ex = DumpExecutor(storage, runner, run_date=RUN_DATE, sleep=sleeps.append)
     assert ex.execute({"prefix": "dead", "query": "q"}, 1) is False
     assert runner.calls == 3
     assert sleeps == [5, 10]

@@ -124,12 +124,14 @@ def test_f5_chunk_parity_holds_on_object_store(spark, s3):
     df = spark.range(1000).selectExpr("id AS n")
     n = s3.write_parquet(df, target, chunksize=77)
     assert n == -(-1000 // 77)
+    assert len(s3.list_parquet_files(target)) == n
     back = spark.read.parquet(target)
     assert back.count() == 1000
     # append mode: a second dump lands NEXT to the first, and the per-dump
     # count reflects only the new objects
     n2 = s3.write_parquet(spark.range(10).selectExpr("id AS n"), target, chunksize=77)
     assert n2 == 1
+    assert len(s3.list_parquet_files(target)) == n + n2
     assert spark.read.parquet(target).count() == 1010
 
 

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) for the pure-Python engine layers:
-floorplan parsing, retry policy, path building, and the MinHash affine
+floorplan parsing, the retry rule, path building, and the MinHash affine
 hash family. No SparkSession — these run in milliseconds.
 """
 
@@ -11,7 +11,7 @@ import yaml
 from hypothesis import given
 from hypothesis import strategies as st
 
-from floorist_spark.executor import RETRYABLE_ERROR_PATTERNS, RetryPolicy, RetryResult
+from floorist_spark.executor import MAX_RETRIES, RETRY_DELAY, RETRYABLE_ERROR_PATTERNS
 from floorist_spark.floorplan import DEFAULT_CHUNKSIZE, parse_floorplan
 from floorist_spark.functions.textfrag import MERSENNE31, _affine_coef
 from tests.test_executor import FakeStorage, FlakyRunner, make_executor
@@ -60,27 +60,33 @@ def test_spec_chunksize_semantics(row):
         assert storage.writes[0][2] == raw
 
 
-@given(st.integers(min_value=0, max_value=10), st.integers(min_value=1, max_value=60))
-def test_backoff_schedule(attempt, base):
-    assert RetryPolicy(base_delay=base).backoff_delay(attempt) == base * 2**attempt
+def _run(errors) -> tuple[bool, int, list[float]]:
+    """One dump through DumpExecutor.execute whose query raises ``errors``
+    in turn: (ok, query attempts, backoff sleeps)."""
+    runner, sleeps = FlakyRunner(errors), []
+    ok = make_executor(FakeStorage(), runner, sleeps).execute({"prefix": "p", "query": "q"}, 1)
+    return ok, runner.calls, sleeps
+
+
+@given(st.integers(min_value=0, max_value=MAX_RETRIES))
+def test_backoff_schedule(failures):
+    ok, calls, sleeps = _run([Exception("SerializationFailure")] * failures)
+    assert ok is (failures < MAX_RETRIES)
+    assert calls == min(failures + 1, MAX_RETRIES)
+    assert sleeps == [RETRY_DELAY * 2**a for a in range(min(failures, MAX_RETRIES - 1))]
 
 
 @given(st.text(max_size=80))
 def test_non_matching_errors_never_retry(msg):
     if any(p in msg for p in RETRYABLE_ERROR_PATTERNS):
         return
-    policy = RetryPolicy()
-    for attempt in range(policy.max_retries):
-        assert policy.evaluate(Exception(msg), attempt) == RetryResult.FAILURE
+    assert _run([Exception(msg)]) == (False, 1, [])
 
 
 @given(st.sampled_from(RETRYABLE_ERROR_PATTERNS), st.text(max_size=20))
 def test_matching_errors_retry_then_exhaust(pattern, padding):
-    policy = RetryPolicy()
     ex = Exception(padding + pattern + padding)
-    for attempt in range(policy.max_retries - 1):
-        assert policy.evaluate(ex, attempt) == RetryResult.RETRY
-    assert policy.evaluate(ex, policy.max_retries - 1) == RetryResult.EXHAUSTED
+    assert _run([ex] * MAX_RETRIES) == (False, MAX_RETRIES, [5, 10])
 
 
 @given(st.dates(min_value=date(2000, 1, 1), max_value=date(2099, 12, 31)))

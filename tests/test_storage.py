@@ -57,6 +57,7 @@ def test_chunksize_none_gives_single_file(spark, storage):
     _, target = storage.make_path("chunk0", run_date=date(2026, 1, 2))
     n = storage.write_parquet(df, target, chunksize=None)
     assert n == 1
+    assert len(storage.list_parquet_files(target)) == 1
 
 
 @pytest.mark.slow
@@ -69,19 +70,29 @@ def test_million_rows_chunksize_1000_gives_1000_files(spark, storage):
     _, target = storage.make_path("large", run_date=date(2026, 1, 2))
     n = storage.write_parquet(df, target, chunksize=1000)
     assert n == 1000
+    # the files themselves, listed in-process: a Hadoop listing of 1000
+    # local files costs seconds of py4j round trips
+    assert sum(f.endswith(".parquet") for f in os.listdir(_local(target))) == 1000
     back = spark.read.parquet(target)
     assert back.count() == 1_000_000
 
 
 def test_append_mode_accumulates(spark, storage):
     # the reference writer appends (floorist.py:101); a second run on the
-    # same day adds files instead of replacing them
+    # same day adds files instead of replacing them, and each write counts
+    # only the files it wrote, not what the prefix already holds
     df = spark.range(0, 10).select(F.col("id").alias("n"))
     _, target = storage.make_path("append", run_date=date(2026, 1, 2))
-    storage.write_parquet(df, target, chunksize=None)
-    storage.write_parquet(df, target, chunksize=None)
+    assert storage.write_parquet(df, target, chunksize=None) == 1
+    assert storage.write_parquet(df, target, chunksize=None) == 1
     assert len(storage.list_parquet_files(target)) == 2
     assert spark.read.parquet(target).count() == 20
+
+    df = spark.range(0, 1000).select(F.col("id").alias("n"))
+    _, target = storage.make_path("append13", run_date=date(2026, 1, 2))
+    assert storage.write_parquet(df, target, chunksize=13) == 77
+    assert storage.write_parquet(df, target, chunksize=13) == 77
+    assert len(storage.list_parquet_files(target)) == 154
 
 
 def test_gzip_compression(spark, storage):
@@ -103,6 +114,7 @@ def test_parity_writer_is_parallel_with_exact_count(spark, storage):
     _, target = storage.make_path("par13", run_date=date(2026, 1, 2))
     n = storage.write_parquet(df, target, chunksize=13)
     assert n == 77  # exact parity through the parallel path
+    assert len(storage.list_parquet_files(target)) == 77
 
 
 def test_parity_chunks_land_whole_with_chunk_zero_in_partition_zero(spark, storage):
@@ -141,6 +153,7 @@ def test_parity_chunks_land_whole_with_chunk_zero_in_partition_zero(spark, stora
     df = spark.range(0, (n + 1) * chunksize - 2)
     _, target = storage.make_path("placed", run_date=date(2026, 1, 2))
     assert storage.write_parquet(df, target, chunksize=chunksize) == n + 1
+    assert len(storage.list_parquet_files(target)) == n + 1
 
 
 def test_parity_write_keeps_rows_with_duplicates_nulls_and_maps(spark, storage):
@@ -181,6 +194,7 @@ def test_parity_count_exact_with_map_column(spark, storage):
     _, target = storage.make_path("parmap", run_date=date(2026, 1, 2))
     n = storage.write_parquet(df, target, chunksize=30)
     assert n == 4  # ceil(100/30)
+    assert len(storage.list_parquet_files(target)) == 4
     assert spark.read.parquet(target).count() == 100
 
 
