@@ -85,8 +85,8 @@ class DumpExecutor:
 
     ``query_runner`` builds the DataFrame for a SQL string — ``spark.sql``
     in native mode, a JDBC read in jdbc mode. The DataFrame is lazy; the
-    only actions are the emptiness probe and the write, both inside the
-    retry scope so a mid-write failure replays the whole query after
+    sink executes it once (``StorageClient.write_parquet``), inside the
+    retry scope, so a mid-write failure replays the whole query after
     cleanup.
     """
 
@@ -140,7 +140,7 @@ class DumpExecutor:
                 return True
 
             except Exception as ex:
-                logging.warning("[Dump #%d] Database error, rolling back", dump_count)
+                logging.warning("[Dump #%d] Attempt %d failed", dump_count, attempt + 1)
                 if not is_retryable(ex):
                     logging.exception("[Dump #%d] %s", dump_count, ex)
                     break

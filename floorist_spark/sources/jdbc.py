@@ -4,13 +4,15 @@ The reference's only data source is one streaming PostgreSQL connection
 (`/root/reference/src/floorist/floorist.py:123-146`): a single server-side
 cursor pages the opaque SQL string into bounded-memory chunks. The Spark
 equivalent is the built-in JDBC source with the ``query`` option; memory is
-bounded by ``fetchsize`` (rows per round-trip) instead of pandas chunks.
+bounded by ``DEFAULT_FETCHSIZE`` rows per round-trip instead of pandas chunks.
 
 F9 (one database snapshot per dump): every read pins ``numPartitions=1``,
 so a dump's whole result comes over ONE connection and therefore from one
 snapshot, matching the reference's per-dump transaction
-(`floorist.py:128,148-152`). Spark JDBC reads auto-commit, so there is no
-transaction to commit or roll back around the dump.
+(`floorist.py:128,148-152`). The sink executes the read once per attempt
+(``StorageClient.write_parquet`` persists it for the count and the write),
+so a dump sees exactly that snapshot. Spark JDBC reads auto-commit, so
+there is no transaction to commit or roll back around the dump.
 
 F3 (uuid→string): Spark's built-in PostgresDialect already maps PG ``uuid``
 to ``StringType`` — the custom OID-2950 type caster at
@@ -67,11 +69,7 @@ def jdbc_url(config: Config) -> str:
     return f"jdbc:postgresql://{config.database_hostname}/{config.database_name}"
 
 
-def build_jdbc_options(
-    config: Config,
-    query: str,
-    fetchsize: int | None = None,
-) -> dict[str, str]:
+def build_jdbc_options(config: Config, query: str) -> dict[str, str]:
     """The options dict for ``spark.read.format("jdbc")`` — split out so the
     surface is unit-testable without a live PostgreSQL."""
     return {
@@ -79,24 +77,19 @@ def build_jdbc_options(
         "query": query,
         "user": config.database_username or "",
         "password": config.database_password or "",
-        "fetchsize": str(fetchsize or DEFAULT_FETCHSIZE),
+        "fetchsize": str(DEFAULT_FETCHSIZE),
         "driver": config.jdbc_driver or DEFAULT_DRIVER,
         "numPartitions": "1",
     }
 
 
-def read_query(
-    spark: SparkSession,
-    config: Config,
-    query: str,
-    fetchsize: int | None = None,
-) -> DataFrame:
+def read_query(spark: SparkSession, config: Config, query: str) -> DataFrame:
     """F2: execute an opaque SQL string on PostgreSQL, lazily
     (`floorist.py:141-146`). Catalyst still prunes/pushes into the outer
     plan; the inner query runs verbatim on the server, exactly like the
     reference's ``pd.read_sql``."""
     reader = spark.read.format("jdbc")
-    for k, v in build_jdbc_options(config, query, fetchsize).items():
+    for k, v in build_jdbc_options(config, query).items():
         reader = reader.option(k, v)
     return coerce_unwritable_columns(reader.load())
 

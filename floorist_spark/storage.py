@@ -16,14 +16,14 @@ Reference semantics reproduced:
   /root/reference/tests/test_floorist.py:166-168`).
 * **F5 write_parquet** — gzip Parquet, append mode, exactly
   ceil(N/chunksize) files, or one file unchunked (the reference's counts,
-  `tests/test_floorist.py:160-188`). Chunks are written in parallel, each
-  whole in one task (``StorageClient._plan_writer``), so the write's own
-  row count gives its file count.
-* **F6 empty-relation sink** — a 0-row (or 0-column) result writes a
-  directory marker, NOT a Parquet file (`floorist.py:102-110`; on S3A
-  ``mkdirs`` creates exactly the zero-byte trailing-slash object the
-  reference PUTs). The Parquet writer must not run
-  (`tests/test_floorist_standalone.py:436-441`).
+  `tests/test_floorist.py:160-188`). As with the reference's cursor, the
+  query runs once and chunk k is its k-th page of chunksize rows, written
+  in parallel, each whole in one task (``StorageClient._plan_writer``).
+* **F6 empty-relation sink** — a 0-row (or 0-column) result, known from
+  the same per-partition counts, writes a directory marker, NOT a Parquet
+  file (`floorist.py:102-110`; on S3A ``mkdirs`` creates exactly the
+  zero-byte trailing-slash object the reference PUTs). The Parquet writer
+  must not run (`tests/test_floorist_standalone.py:436-441`).
 * **F7 cleanup** — recursive delete of the target prefix before a retry so
   re-writing cannot duplicate rows (`floorist.py:112-113,209-213`).
 * **F12 verify** — startup probe of the bucket root; on an access-denied
@@ -38,23 +38,12 @@ from __future__ import annotations
 import logging
 import os
 from datetime import date
+from itertools import accumulate
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def _hashable(dt: T.DataType) -> bool:
-    """xxhash64 rejects MapType (anywhere in the tree); everything else the
-    sink can carry hashes fine."""
-    if isinstance(dt, T.MapType):
-        return False
-    if isinstance(dt, T.ArrayType):
-        return _hashable(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return all(_hashable(f.dataType) for f in dt.fields)
-    return True
 
 
 class StorageClient:
@@ -117,59 +106,69 @@ class StorageClient:
         chunksize: int | None = None,
         dump_count: int = 0,
     ) -> int:
-        """Write one dump; returns the number of Parquet files it wrote:
-        ceil(rows/chunksize), or one file when ``chunksize`` is falsy
-        (`floorist.py:194`: falsy chunksize → one pandas chunk → one file).
-        The number is derived, not listed: ``_plan_writer`` makes it exact,
-        and ``rows`` is observed in this write's own result stage, so files
-        already under an append-mode prefix do not count.
+        """Write one dump, executing its query once; returns the number of
+        Parquet files it wrote: ceil(rows/chunksize), or one file when
+        ``chunksize`` is falsy (`floorist.py:194`: falsy chunksize → one
+        pandas chunk → one file).
 
-        Empty (0-row or 0-column) results take the F6 marker path and never
-        invoke the Parquet writer.
+        The result is persisted and one job counts its rows per partition:
+        emptiness (a 0-row or 0-column result takes the F6 marker path and
+        never invokes the Parquet writer), the file count and each row's
+        chunk all come from those counts. A plan the caller already cached
+        stays cached; otherwise the persist ends with the write, so a retry
+        re-executes the query and reads a fresh snapshot.
         """
-        if len(df.columns) == 0 or df.isEmpty():
+        rows = 0
+        if df.columns:
+            owned = df.storageLevel == StorageLevel.NONE
+            if owned:
+                df.persist()
+            try:
+                counts = dict(df.groupBy(F.spark_partition_id()).count().collect())
+                rows = sum(counts.values())
+                if rows:
+                    writer = self._plan_writer(df, chunksize, counts).write.option("maxRecordsPerFile", chunksize or 0)
+                    writer.parquet(target, mode="append", compression="gzip")
+            finally:
+                if owned:
+                    df.unpersist()
+        if not rows:
             self.write_empty_marker(target)
             logging.info("[Dump #%d] Empty folder created for empty result", dump_count)
             return 0
 
-        planned = self._plan_writer(df, chunksize)
-        written = Observation()
-        if chunksize:  # unchunked is one file: nothing to count
-            planned = planned.observe(written, F.count(F.lit(1)).alias("rows"))
-        planned.write.mode("append").options(compression="gzip", maxRecordsPerFile=chunksize or 0).parquet(target)
-        files = -(-written.get["rows"] // chunksize) if chunksize else 1
+        files = -(-rows // chunksize) if chunksize else 1
         for chunk in range(1, files + 1):
             logging.info("[Dump #%d] Written parquet chunk #%d", dump_count, chunk)
         return files
 
-    def _plan_writer(self, df: DataFrame, chunksize: int | None) -> DataFrame:
-        """Shape the writer input so the file count is exact and the
-        gzip/Parquet encode of a chunked dump runs on ~cores tasks.
+    def _plan_writer(self, df: DataFrame, chunksize: int | None, counts: dict[int, int]) -> DataFrame:
+        """Shape the writer input so chunk k is the k-th page of ``chunksize``
+        rows of the result, the file count is exact, and the gzip/Parquet
+        encode of a chunked dump runs on ~cores tasks.
 
-        Unchunked is one file, so one task (``coalesce(1)``). Chunked, each
-        write task emits ceil(rows_in_task / chunksize) files under
-        ``maxRecordsPerFile``, so the total is ceil(N/chunksize) iff every
-        task holds whole chunks and only one holds the partial last chunk.
-        Each row gets a global chunk id from a row_number over a
-        deterministic order (xxhash64 of the row, so a retried stage
-        reproduces the assignment, SPARK-38388 class), and chunk ``c`` is
-        placed in partition ``c mod n``. ``FileFormatWriter`` always writes
-        a file from task 0, even an empty one, so chunk 0 must live there;
-        ``c mod n`` puts it there. The row_number pass is single-partition,
-        but it only numbers rows: the encode is what runs in parallel.
+        Unchunked is one file, so one task (``coalesce(1)``). Chunked, a
+        row's index is offset[p] + i, where ``monotonically_increasing_id``
+        gives its partition p and position i there, and offset[p] sums the
+        per-partition ``counts`` of the same persisted blocks below p: the
+        numbering is deterministic while those blocks live. Chunk
+        ``c = index // chunksize`` is placed in partition ``c mod n``, so
+        every write task holds whole chunks and only one holds the partial
+        last chunk; under ``maxRecordsPerFile`` the total is ceil(N/chunksize).
+        A local task reads its map outputs in map order, so each file is one
+        chunk. ``FileFormatWriter`` always writes a file from task 0, even an
+        empty one, so chunk 0 must live there; ``c mod n`` puts it there.
         """
         if not chunksize:
             return df.coalesce(1)
-        order = (
-            F.xxhash64(*df.columns)
-            if all(_hashable(f.dataType) for f in df.schema.fields)
-            else F.lit(1)  # map-typed rows: count-correct, order-arbitrary
-        )
-        chunk = ((F.row_number().over(Window.orderBy(order)) - 1) / chunksize).cast("long")
-        n = self.spark.sparkContext.defaultParallelism
+        offsets = F.array(*map(F.lit, [0, *accumulate(counts.get(p, 0) for p in range(max(counts)))]))
         tag = "__floorist_chunk__"
+        rid = F.col(tag)  # p << 33 | i
+        index = offsets[F.shiftright(rid, 33)] + rid.bitwiseAND((1 << 33) - 1)
+        n = self.spark.sparkContext.defaultParallelism
         return (
-            df.withColumn(tag, F.pmod(chunk, F.lit(n)).cast("int"))
+            df.withColumn(tag, F.monotonically_increasing_id())
+            .withColumn(tag, F.pmod((index / chunksize).cast("long"), F.lit(n)).cast("int"))
             .repartitionById(n, tag)
             .drop(tag)
         )

@@ -26,10 +26,6 @@ def test_options_parity_mode_pins_single_partition():
     assert opts["fetchsize"] == "1000"  # reference default chunksize
 
 
-def test_custom_fetchsize():
-    assert build_jdbc_options(CFG, "q", fetchsize=500)["fetchsize"] == "500"
-
-
 def test_coerce_is_noop_for_writable_schema(spark):
     df = spark.range(3).select(
         F.col("id"), F.lit("s").alias("t"), F.lit(1.5).alias("d")

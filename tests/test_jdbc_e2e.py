@@ -6,8 +6,8 @@ PostgreSQL at `/root/reference/tests/test_floorist.py:15-220`). No database
 server exists in this sandbox, but Spark ships embedded Derby, so the SAME
 code path — ``read_query`` → ``coerce_unwritable_columns`` →
 ``DumpExecutor.execute`` → partitioned parquet sink — executes here against
-a real JDBC wire: real driver class loading, real fetchsize paging, real
-dialect type mapping (INT/BIGINT/DECIMAL/VARCHAR/DATE/TIMESTAMP/BOOLEAN).
+a real JDBC wire: real driver class loading, real dialect type mapping
+(INT/BIGINT/DECIMAL/VARCHAR/DATE/TIMESTAMP/BOOLEAN).
 
 The postgres-specific pieces (URL construction, pg dialect uuid→string) stay
 covered by test_jdbc.py's unit surface; what this file adds is the proof
@@ -78,17 +78,16 @@ def derby(spark):
 
 
 def test_build_options_use_override_url_and_driver():
-    opts = build_jdbc_options(derby_config(), "SELECT 1", fetchsize=2)
+    opts = build_jdbc_options(derby_config(), "SELECT 1")
     assert opts["url"] == DERBY_URL
     assert opts["driver"] == DERBY_DRIVER
-    assert opts["fetchsize"] == "2"
+    assert opts["fetchsize"] == "1000"
     assert opts["numPartitions"] == "1"
 
 
 def test_read_query_executes_on_live_jdbc(spark, derby):
-    # F2: the opaque SQL string runs verbatim on the database; fetchsize=2
-    # forces multiple wire round-trips over the 3 rows.
-    df = read_query(spark, derby_config(), "SELECT * FROM invoices", fetchsize=2)
+    # F2: the opaque SQL string runs verbatim on the database.
+    df = read_query(spark, derby_config(), "SELECT * FROM invoices")
     got = {r["ID"]: r for r in df.collect()}
     assert set(got) == {1, 2, 3}
     assert got[1]["NAME"] == "alpha"

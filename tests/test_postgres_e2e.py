@@ -312,14 +312,13 @@ def test_numeric_type_zoo_bit_exact(spark, pg_server, pg_driver):
 
 
 def test_fetchsize_pages_server_side(spark, pg_server, pg_driver):
-    # F2: fetchsize bounds rows per wire round-trip; 5000 rows at
-    # fetchsize=100 forces ~50 fetches through one connection
+    # F2: fetchsize bounds rows per wire round-trip; 5000 rows at the
+    # default 1000 take 5 fetches through one connection
     # (numPartitions=1 parity — one snapshot, reference F9).
     df = read_query(
         spark,
         pg_config(pg_server),
         "SELECT i, md5(i::text) AS h FROM generate_series(1, 5000) AS t(i)",
-        fetchsize=100,
     )
     agg = df.selectExpr("count(*) AS c", "sum(i) AS s").collect()[0]
     assert agg["c"] == 5000
@@ -449,11 +448,6 @@ def test_jdbc_undefined_table_fails_at_once_and_run_exits_1(
     assert not (out / "exports/missing").exists()
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="ROADMAP item 2: the sink's emptiness probe (df.isEmpty) executes "
-    "a JDBC dump's query a second time, over a second connection",
-)
 def test_jdbc_dump_executes_query_once(spark, pg_server, seeded, tmp_path):
     # F9: one execution per dump, so one database snapshot. nextval() in
     # the select list counts the rows the server computed for each dump.

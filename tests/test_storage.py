@@ -8,7 +8,6 @@ import os
 from datetime import date
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -22,6 +21,17 @@ def storage(spark, tmp_path):
 
 def _local(uri: str) -> str:
     return uri.removeprefix("file://")
+
+
+def _counts(df) -> dict[int, int]:
+    """Rows per input partition, as ``write_parquet`` counts them."""
+    return dict(df.groupBy(F.spark_partition_id()).count().collect())
+
+
+def _pages(spark, target) -> list[tuple[int, int, int]]:
+    """(min n, max n, rows) per written file, ordered by min n."""
+    per_file = spark.read.parquet(target).groupBy(F.input_file_name()).agg(F.min("n"), F.max("n"), F.count("n"))
+    return sorted(tuple(r)[1:] for r in per_file.collect())
 
 
 # -- F4: partitioned path, unpadded month/day --------------------------------
@@ -109,7 +119,7 @@ def test_parity_writer_is_parallel_with_exact_count(spark, storage):
     # >1 task encodes concurrently while the file count stays EXACTLY
     # ceil(N/chunksize).
     df = spark.range(0, 1000).select(F.col("id").alias("n"))
-    planned = storage._plan_writer(df, 13)
+    planned = storage._plan_writer(df, 13, _counts(df))
     assert planned.rdd.getNumPartitions() > 1
     _, target = storage.make_path("par13", run_date=date(2026, 1, 2))
     n = storage.write_parquet(df, target, chunksize=13)
@@ -120,9 +130,9 @@ def test_parity_writer_is_parallel_with_exact_count(spark, storage):
 def test_parity_chunks_land_whole_with_chunk_zero_in_partition_zero(spark, storage):
     # the file count telescopes to ceil(N/chunksize) only if every chunk
     # lies whole in one write task and task 0 (which always writes a file)
-    # holds chunk 0. Chunk counts around the partition count, one collect;
-    # each row's chunk is recomputed from the writer's documented order
-    # (xxhash64 of the row) after the partition id is taken.
+    # holds chunk 0. Chunk counts around the partition count, one collect.
+    # The writer numbers rows in the result's order and chunk k is its k-th
+    # page; spark.range's order is n, so row n belongs to chunk n // chunksize.
     n = spark.sparkContext.defaultParallelism
     chunksize = 5
     cases = sorted({1, max(n - 1, 1), n, n + 1, 77})
@@ -130,36 +140,61 @@ def test_parity_chunks_land_whole_with_chunk_zero_in_partition_zero(spark, stora
     for chunks in cases:
         df = spark.range(0, chunks * chunksize - 2).select(F.col("id").alias("n"))
         part = (
-            storage._plan_writer(df, chunksize)
+            storage._plan_writer(df, chunksize, _counts(df))
             .select("n", F.spark_partition_id().alias("pid"))
-            .select(
-                F.lit(chunks).alias("case"),
-                "pid",
-                ((F.row_number().over(Window.orderBy(F.xxhash64("n"))) - 1) / chunksize)
-                .cast("long")
-                .alias("chunk"),
-            )
+            .select(F.lit(chunks).alias("case"), "pid", (F.col("n") / chunksize).cast("long").alias("chunk"))
         )
         placed = part if placed is None else placed.unionByName(part)
     got = placed.groupBy("case", "pid", "chunk").count().collect()
     for chunks in cases:
-        pids = {}
+        pids, sizes = {}, {}
         for r in got:
             if r.case == chunks:
                 pids.setdefault(r.chunk, set()).add(r.pid)
+                sizes[r.chunk] = sizes.get(r.chunk, 0) + r["count"]
         assert sorted(pids) == list(range(chunks))  # every chunk is present
         assert all(len(p) == 1 for p in pids.values())  # ...whole in one task
         assert pids[0] == {0}  # chunk 0 in partition 0
+        # every chunk is full but the last
+        assert [sizes[c] for c in range(chunks)] == [chunksize] * (chunks - 1) + [chunksize - 2]
     df = spark.range(0, (n + 1) * chunksize - 2)
     _, target = storage.make_path("placed", run_date=date(2026, 1, 2))
     assert storage.write_parquet(df, target, chunksize=chunksize) == n + 1
     assert len(storage.list_parquet_files(target)) == n + 1
 
 
+def test_chunks_are_pages_of_the_ordered_result(spark, storage):
+    # the reference's chunk k is the k-th page of its cursor
+    # (floorist.py:141-178): each file holds one contiguous run of the
+    # query's ORDER BY, 13 rows each and the rest in the last
+    spark.range(0, 1000, 1, 7).createOrReplaceTempView("pages_src")
+    df = spark.sql("SELECT id AS n FROM pages_src ORDER BY n DESC")
+    _, target = storage.make_path("pages", run_date=date(2026, 1, 2))
+    assert storage.write_parquet(df, target, chunksize=13) == 77
+    assert len(storage.list_parquet_files(target)) == 77
+    want = [(max(0, 1000 - 13 * (k + 1)), 999 - 13 * k) for k in range(77)]
+    assert _pages(spark, target) == sorted((lo, hi, hi - lo + 1) for lo, hi in want)
+
+
+def test_exact_count_and_content_with_empty_partitions(spark, storage):
+    # 8 input partitions of 125 rows; the filter empties the first (0), a
+    # middle (3) and the last (7), so the offsets skip partitions with no rows
+    df = spark.range(0, 1000, 1, 8).select(F.col("id").alias("n"))
+    df = df.filter(F.col("n").between(125, 374) | F.col("n").between(500, 874))
+    assert sorted(_counts(df)) == [1, 2, 4, 5, 6]
+    _, target = storage.make_path("holes", run_date=date(2026, 1, 2))
+    assert storage.write_parquet(df, target, chunksize=13) == 49  # ceil(625/13)
+    assert len(storage.list_parquet_files(target)) == 49
+    back = [r.n for r in spark.read.parquet(target).collect()]
+    assert sorted(back) == [*range(125, 375), *range(500, 875)]
+    sizes = [rows for _, _, rows in _pages(spark, target)]
+    assert sorted(sizes) == [1] + [13] * 48
+
+
 def test_parity_write_keeps_rows_with_duplicates_nulls_and_maps(spark, storage):
     # the parity checks above count files; this one checks what is in them:
-    # duplicate rows, NULLs and a MapType column (no xxhash64 order)
-    # round-trip as the same multiset of rows
+    # duplicate rows, NULLs and a MapType column round-trip as the same
+    # multiset of rows
     data = [
         (
             None if i % 100 == 0 else i % 100,
@@ -186,8 +221,8 @@ def test_parity_write_keeps_rows_with_duplicates_nulls_and_maps(spark, storage):
 
 
 def test_parity_count_exact_with_map_column(spark, storage):
-    # MapType rows can't feed xxhash64; the fallback ordering must still
-    # land the exact chunk count.
+    # the chunk numbering reads no column, so MapType rows land the exact
+    # chunk count like any others.
     df = spark.range(0, 100).select(
         F.col("id").alias("n"), F.create_map(F.lit("k"), F.col("id")).alias("m")
     )
@@ -234,6 +269,41 @@ def test_empty_marker_skips_writer(spark, storage, monkeypatch):
     _, target = storage.make_path("noparquet", run_date=date(2026, 1, 2))
     storage.write_parquet(df, target)
     assert called == []
+
+
+def test_write_leaves_persisted_rdds_as_found(spark, storage):
+    # write_parquet persists the result for its one execution and drops it
+    # after a write, an empty write and a failed write; a plan the caller
+    # already cached, reached through the same object or another one with
+    # the same plan, stays cached at the caller's level
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    _, target = storage.make_path("hygiene", run_date=date(2026, 1, 2))
+    assert storage.write_parquet(spark.range(0, 100), target, chunksize=13) == 8
+    assert jsc.getPersistentRDDs().size() == before
+    assert storage.write_parquet(spark.range(0, 100).filter("id < 0"), target, chunksize=13) == 0
+    assert jsc.getPersistentRDDs().size() == before
+    boom = spark.range(0, 100).select(
+        F.when(F.col("id") == 50, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("n")
+    )
+    with pytest.raises(Exception, match="boom"):
+        storage.write_parquet(boom, target, chunksize=13)
+    assert jsc.getPersistentRDDs().size() == before
+
+    def make():
+        return spark.range(0, 100).select((F.col("id") * 7).alias("n"))
+
+    cached = make().persist()
+    level = cached.storageLevel
+    same = make()
+    assert same.storageLevel == level
+    try:
+        for df in (cached, same):
+            assert storage.write_parquet(df, target, chunksize=13) == 8
+            assert cached.storageLevel == level and same.storageLevel == level
+        assert jsc.getPersistentRDDs().size() == before + 1
+    finally:
+        cached.unpersist()
 
 
 # -- F7: cleanup ---------------------------------------------------------------
