@@ -4,7 +4,7 @@
 RUFF ?= ruff
 PYTEST ?= python -m pytest
 COMPOSE = docker compose -f tests/compose/docker-compose.yml
-PY_TARGETS = floorist_spark tests __spark_entry__.py bench.py selfcheck.py
+PY_TARGETS = floorist_spark tests tools __spark_entry__.py bench.py selfcheck.py
 
 .PHONY: all format check lint test verify bench compose-up compose-down
 
@@ -16,13 +16,13 @@ format:
 check:
 	$(RUFF) check $(PY_TARGETS)
 
-# ruff is the real gate; this box has no network and no vendored wheel
-# (pip download fails), so lint falls back to the stdlib subset in
-# tools/lint_fallback.py rather than failing with "ruff: not found" and
-# enforcing nothing (round-6 judge finding).
+# ruff is the real gate and only checks: `make format` is the one target
+# that rewrites files. Where ruff is not installed, lint falls back to the
+# stdlib subset in tools/lint_fallback.py (same targets) rather than
+# failing with "ruff: not found" and enforcing nothing.
 lint:
 	@if command -v $(RUFF) >/dev/null 2>&1; then \
-		$(RUFF) format $(PY_TARGETS) && $(RUFF) check $(PY_TARGETS); \
+		$(RUFF) format --check $(PY_TARGETS) && $(RUFF) check $(PY_TARGETS); \
 	else \
 		echo "ruff unavailable on this box -> stdlib fallback gate"; \
 		python tools/lint_fallback.py; \

@@ -16,7 +16,9 @@ Reference semantics (`/root/reference/src/floorist/floorist.py`):
   one connection ``sources/jdbc.py`` pins per dump.
 * **F10 execute(row, dump_count)** — missing ``prefix``/``query`` is not a
   parse error: it fails that dump only and later dumps still run
-  (`floorist.py:186-197`, `tests/test_floorist.py:190-198`).
+  (`floorist.py:186-197`, `tests/test_floorist.py:190-198`). So does a
+  ``chunksize`` that is neither falsy nor a positive int, before its query
+  runs.
 
 Design deviation, documented: the reference matches message patterns on
 SQLAlchemy errors (`floorist.py:221-224`). Through Spark's JDBC source a
@@ -109,9 +111,11 @@ class DumpExecutor:
             path, target = self.storage.make_path(row["prefix"], self.run_date)
             query = row["query"]
             # missing chunksize defaults to 1000; explicit 0/None → unchunked
-            # (`floorist.py:194`)
+            # (`floorist.py:194`); any other value must be a positive int
             chunksize = row.get("chunksize", DEFAULT_CHUNKSIZE) or None
-        except KeyError as ex:
+            if chunksize is not None and (type(chunksize) is not int or chunksize < 1):
+                raise ValueError(f"chunksize must be a positive integer, got {chunksize!r}")
+        except (KeyError, ValueError) as ex:
             logging.exception("[Dump #%d] %s", dump_count, ex)
             return False
 

@@ -200,15 +200,23 @@ def all_oracles() -> dict[str, str]:
 
 
 def resolve_catalog_query(
-    spark: SparkSession, query: str, data_dir: str
+    spark: SparkSession, query: str, data_dir: str | None
 ) -> DataFrame | None:
     """If ``query`` is a ``catalog:<name>`` reference, build that operator's
     DataFrame over ``data_dir``; otherwise return None (caller treats the
     string as SQL). Unknown names raise KeyError — the executor's per-dump
-    isolation turns that into a failed dump, not a crashed run."""
+    isolation turns that into a failed dump, not a crashed run. A catalog
+    query with no data dir is a config error too, NOT a fall-back to
+    bundled testdata: a misconfigured production run must fail fast, never
+    export toy data to the real sink."""
     q = query.strip()
     if not q.startswith(CATALOG_PREFIX):
         return None
+    if data_dir is None:
+        raise ValueError(
+            "FLOORIST_DATA_DIR must be set for catalog:<name> "
+            "floorplan queries in native mode"
+        )
     name = q[len(CATALOG_PREFIX) :].strip()
     fns = all_queries()
     if name not in fns:

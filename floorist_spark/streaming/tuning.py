@@ -43,25 +43,20 @@ combined aggregate (count + approx_count_distinct).
 from __future__ import annotations
 
 import math
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
 #: Target bytes of state per store partition. Production stores are kept
 #: around this size so per-batch snapshot/commit and partition rebalance
-#: stay fast; env-overridable for cluster tuning.
-TARGET_STORE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TARGET_STORE_BYTES", str(64 << 20))
-)
+#: stay fast.
+TARGET_STORE_BYTES = 64 << 20
 
 #: Minimum rows per trigger a state partition should fold before a second
 #: task is worth its scheduling + store fixed cost — for JVM stateful
 #: operators (windowed aggs, session windows, stream-stream joins,
 #: dropDuplicates), whose per-row fold is codegen-cheap.
-ROWS_PER_STATE_TASK = int(
-    os.environ.get("SPARK_GRAFT_ROWS_PER_STATE_TASK", str(64 << 10))
-)
+ROWS_PER_STATE_TASK = 64 << 10
 
 #: Same floor for queries whose fold runs in PYTHON
 #: (applyInPandasWithState): each key costs an Arrow group transfer +
@@ -72,9 +67,7 @@ ROWS_PER_STATE_TASK = int(
 #: the Python work parallel (100k rows → wants 49, clamps to the session
 #: value) while small corpora (10k rows at sf0.01 → 5 stores) still shed
 #: the per-store floor.
-PY_ROWS_PER_STATE_TASK = int(
-    os.environ.get("SPARK_GRAFT_PY_ROWS_PER_STATE_TASK", str(2 << 10))
-)
+PY_ROWS_PER_STATE_TASK = 2 << 10
 
 #: Keys floor for Python folds: the per-KEY invocation overhead (one
 #: Arrow group + one pandas frame + one state round-trip per key per
@@ -82,9 +75,7 @@ PY_ROWS_PER_STATE_TASK = int(
 #: Measured: d08 (5000 single-row keys) ran 2.2s at 32 partitions and
 #: 3.3s when the rows floor alone sized it to 3 — ~192 keys/task keeps
 #: its per-key Python amortized at the same per-store fixed cost.
-PY_KEYS_PER_STATE_TASK = int(
-    os.environ.get("SPARK_GRAFT_PY_KEYS_PER_STATE_TASK", "192")
-)
+PY_KEYS_PER_STATE_TASK = 192
 
 #: Estimated state width of the exactly-once ingest dedup operator
 #: (dropDuplicates(event_id)): key + empty value + store overhead.

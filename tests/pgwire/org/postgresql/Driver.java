@@ -19,7 +19,8 @@
 //     fetchSize-bounded batches, same shape as pgjdbc's cursor mode
 //   * text-format decoding for the types the reference schema uses:
 //     int2/4/8, float4/8, numeric, text/varchar/bpchar, bool, bytea, date,
-//     timestamp, timestamptz, uuid, json/jsonb, and 1-D arrays
+//     timestamp, timestamptz, uuid, json/jsonb, interval, inet (as their
+//     text form), and 1-D arrays
 //
 // The class is NAMED org.postgresql.Driver because that exact class name is
 // the reference deployment's hardcoded driver (reference floorist.py:123 —
@@ -159,7 +160,8 @@ final class Col {
             case 1083: return Types.TIME;
             case 1114: case 1184: return Types.TIMESTAMP; // timestamp[tz]
             case 1700: return Types.NUMERIC;
-            case 114: case 3802: case 2950: return Types.OTHER; // json/jsonb/uuid
+            // json/jsonb/uuid/interval/inet
+            case 114: case 3802: case 2950: case 1186: case 869: return Types.OTHER;
             case 1000: case 1001: case 1005: case 1007: case 1009:
             case 1014: case 1015: case 1016: case 1021: case 1022:
             case 1115: case 1182: case 1231:
@@ -188,6 +190,8 @@ final class Col {
             case 1700: return "numeric";
             case 2950: return "uuid";
             case 3802: return "jsonb";
+            case 1186: return "interval";
+            case 869: return "inet";
             // array type names: element name with the pg "_" prefix
             case 1000: return "_bool";
             case 1001: return "_bytea";

@@ -215,3 +215,17 @@ def test_chunksize_zero_becomes_unchunked():
     ex.execute({**ROW, "chunksize": 0}, 1)
     ex.execute({**ROW, "chunksize": None}, 2)
     assert [w[2] for w in storage.writes] == [None, None]
+
+
+@pytest.mark.parametrize("chunksize", [-5, "13", 2.5, True])
+def test_malformed_chunksize_fails_dump_before_query(chunksize, caplog):
+    # a value that is neither falsy nor a positive int fails its own dump
+    # before the query runs; the next dump still runs
+    storage, runner = FakeStorage(), FlakyRunner()
+    ex = make_executor(storage, runner)
+    assert ex.execute({**ROW, "chunksize": chunksize}, 1) is False
+    assert runner.calls == 0
+    assert storage.writes == []
+    assert repr(chunksize) in caplog.text
+    assert ex.execute({**ROW, "chunksize": 7}, 2) is True
+    assert [w[2] for w in storage.writes] == [7]

@@ -4,14 +4,16 @@ The reference's identity is "run SQL on a live database and dump the result"
 (`/root/reference/src/floorist/floorist.py:123-146`, e2e-tested against real
 PostgreSQL at `/root/reference/tests/test_floorist.py:15-220`). No database
 server exists in this sandbox, but Spark ships embedded Derby, so the SAME
-code path — ``read_query`` → ``coerce_unwritable_columns`` →
-``DumpExecutor.execute`` → partitioned parquet sink — executes here against
-a real JDBC wire: real driver class loading, real dialect type mapping
-(INT/BIGINT/DECIMAL/VARCHAR/DATE/TIMESTAMP/BOOLEAN).
+code path — ``read_query`` → ``DumpExecutor.execute`` → partitioned
+parquet sink — executes here against a real JDBC wire: real driver class
+loading, real dialect type mapping (INT/BIGINT/DECIMAL/VARCHAR/DATE/
+TIMESTAMP/BOOLEAN) straight into the Parquet writer, with no cast between
+(F3).
 
-The postgres-specific pieces (URL construction, pg dialect uuid→string) stay
-covered by test_jdbc.py's unit surface; what this file adds is the proof
-that the plumbing executes outside mocks.
+The postgres-specific pieces stay covered elsewhere: URL construction by
+test_jdbc.py's unit surface, the pg dialect's uuid/jsonb/interval/inet →
+string by test_postgres_e2e.py; what this file adds is the proof that the
+plumbing executes outside mocks.
 
 Also here: the fault-injection export e2e (VERDICT r2 item 2) — a dump whose
 first attempts fail mid-write with a retryable error, asserting the REAL
@@ -99,9 +101,8 @@ def test_read_query_executes_on_live_jdbc(spark, derby):
 
 
 def test_dialect_types_pass_the_f3_guard_unchanged(spark, derby):
-    # F3: every type Derby's dialect maps is parquet-writable, so the guard
-    # must be a no-op on the REAL wire schema (the cast path is pinned by
-    # test_jdbc.py on exotic in-memory types).
+    # F3: every type Derby's dialect maps is parquet-writable, so the REAL
+    # wire schema goes to the sink as read, with no cast.
     df = read_query(spark, derby_config(), "SELECT * FROM invoices")
     assert [f.dataType.simpleString() for f in df.schema.fields] == [
         "int", "string", "decimal(10,2)", "timestamp", "date", "boolean", "bigint", "double",

@@ -6,8 +6,8 @@ uuid corpus seeded by `tests/enable-extensions.sh` /
 
 The Derby e2e (test_jdbc_e2e.py) proves the plumbing on a real JDBC wire;
 what THIS file adds is the real PostgreSQL dialect: uuid (OID 2950) →
-string (F3), text[] / jsonb / numeric / timestamptz mapping, server-side
-fetchsize paging over generate_series, and the default
+string (F3), text[] / jsonb / interval / inet / numeric / timestamptz
+mapping, server-side fetchsize paging over generate_series, and the default
 ``jdbc:postgresql://host/db`` URL construction from ``POSTGRES_SERVICE_HOST``
 (`sources/jdbc.py:jdbc_url`) that every other test bypasses with
 ``FLOORIST_JDBC_URL``.
@@ -195,15 +195,17 @@ def seeded(spark, pg_server):
     st.execute("DROP TABLE IF EXISTS pg_people")
     st.execute(
         "CREATE TABLE pg_people (id uuid, name text, tags text[], "
-        "meta jsonb, amt numeric(12,4), created timestamptz, n bigint)"
+        "meta jsonb, amt numeric(12,4), created timestamptz, n bigint, "
+        "span interval, addr inet)"
     )
     rows = [
         f"('{UUIDS[0]}', 'one',   ARRAY['a','b'], '{{\"k\": 1}}', 12.5000, "
-        "TIMESTAMPTZ '2026-01-02 03:04:05+00', 9000000000)",
+        "TIMESTAMPTZ '2026-01-02 03:04:05+00', 9000000000, "
+        "INTERVAL '1 day 02:03:04', INET '10.1.2.3/8')",
         f"('{UUIDS[1]}', 'two',   ARRAY['c'],     '{{\"k\": 2}}', 0.2500, "
-        "TIMESTAMPTZ '2026-02-03 04:05:06+00', 1)",
+        "TIMESTAMPTZ '2026-02-03 04:05:06+00', 1, INTERVAL '3 months', INET '::1')",
         f"('{UUIDS[2]}', 'three', ARRAY[]::text[], NULL,          99.9900, "
-        "TIMESTAMPTZ '2026-03-04 05:06:07+00', -7)",
+        "TIMESTAMPTZ '2026-03-04 05:06:07+00', -7, NULL, NULL)",
     ]
     for r in rows:
         st.execute(f"INSERT INTO pg_people VALUES {r}")
@@ -214,8 +216,7 @@ def seeded(spark, pg_server):
 def test_uuid_oid_2950_maps_to_string(spark, pg_server, seeded):
     # F3 on the REAL dialect: the reference registered a psycopg2 caster
     # for OID 2950 (`src/floorist/floorist.py:27-29,117-139`); Spark's
-    # PostgresDialect maps uuid -> StringType, which the F3 guard must
-    # pass through untouched.
+    # PostgresDialect maps uuid -> StringType on its own, with no cast.
     df = read_query(
         spark, pg_config(pg_server), "SELECT id, name FROM pg_people ORDER BY n"
     )
@@ -228,8 +229,9 @@ def test_uuid_oid_2950_maps_to_string(spark, pg_server, seeded):
 
 
 def test_pg_exotic_types_survive_the_dump_path(spark, pg_server, seeded, tmp_path):
-    # text[] / jsonb / numeric / timestamptz through read -> F3 guard ->
-    # partitioned parquet sink, then read back exact.
+    # text[] / jsonb / numeric / timestamptz / interval / inet through
+    # read -> partitioned parquet sink, then read back exact; the dialect
+    # maps every Types.OTHER column (jsonb, interval, inet) to string.
     storage = StorageClient(spark, f"file://{tmp_path}")
     runner = partial(read_query, spark, pg_config(pg_server))
     ex = DumpExecutor(storage, runner, run_date=RUN_DATE)
@@ -245,12 +247,19 @@ def test_pg_exotic_types_survive_the_dump_path(spark, pg_server, seeded, tmp_pat
     assert types["meta"] == "string"  # jsonb arrives as its text form
     assert types["amt"] == "decimal(12,4)"
     assert types["created"].startswith("timestamp")
+    assert types["span"] == "string"
+    assert types["addr"] == "string"
     rows = {r["name"]: r for r in back.collect()}
     assert rows["one"]["tags"] == ["a", "b"]
     assert rows["three"]["tags"] == []
     assert rows["three"]["meta"] is None
     assert str(rows["one"]["amt"]) == "12.5000"
     assert rows["two"]["n"] == 1
+    assert rows["one"]["span"] == "1 day 02:03:04"
+    assert rows["two"]["span"] == "3 mons"
+    assert rows["one"]["addr"] == "10.1.2.3/8"
+    assert rows["two"]["addr"] == "::1"
+    assert rows["three"]["span"] is None and rows["three"]["addr"] is None
 
 
 def test_numeric_type_zoo_bit_exact(spark, pg_server, pg_driver):

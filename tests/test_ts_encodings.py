@@ -25,7 +25,7 @@ from floorist_spark.operators.events_analytics import (
     e06_range_join,
     e07_streaming_watermark,
 )
-from floorist_spark.session import load_table
+from floorist_spark.session import get_spark, load_table
 
 ENCODINGS = ("nanos", "micros_ntz", "micros_utc")
 
@@ -147,3 +147,22 @@ def test_events_value_is_two_decimal_currency():
         "WHERE value IS NOT NULL AND value != round(value, 2)"
     ).fetchone()[0]
     assert n == 0, f"{n} events.value rows exceed 2 decimal digits"
+
+
+def test_get_spark_applies_its_confs_to_a_live_session(spark):
+    # the nanos encoding above reads through nanosAsLong: get_spark on a
+    # live session (getOrCreate) applies it again, an extra_conf value
+    # wins over it, and AQE is on by Spark's own defaults
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    try:
+        spark.conf.set(key, "false")
+        assert get_spark().conf.get(key) == "true"
+        assert get_spark(extra_conf={key: "false"}).conf.get(key) == "false"
+        for aqe in (
+            "spark.sql.adaptive.enabled",
+            "spark.sql.adaptive.coalescePartitions.enabled",
+            "spark.sql.adaptive.skewJoin.enabled",
+        ):
+            assert spark.conf.get(aqe) == "true"
+    finally:
+        spark.conf.set(key, "true")
