@@ -23,14 +23,4 @@ built-in operators genuinely cannot express the semantics, and then always
 as Arrow-batched pandas UDFs.
 """
 
-from floorist_spark.floorplan import load_floorplan
-from floorist_spark.session import get_spark, register_views
-
 __version__ = "0.1.0"
-
-__all__ = [
-    "load_floorplan",
-    "get_spark",
-    "register_views",
-    "__version__",
-]

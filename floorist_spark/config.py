@@ -16,9 +16,12 @@ Spark-specific additions (not in the reference):
 * ``FLOORIST_OUTPUT_URI`` — write target override for native mode
   (``file:///...`` for local runs, any Hadoop-FS URI on a cluster). When
   unset the target is ``s3a://<AWS_BUCKET>`` as in the reference.
-* ``mode`` — ``"native"`` (queries run on Catalyst over registered views;
-  no database needed) vs ``"jdbc"`` (queries pushed to live PostgreSQL for
-  reference parity). Validation requires database settings only for jdbc.
+* ``FLOORIST_MODE`` — ``"native"`` (the default: queries run on Catalyst
+  over the views of ``FLOORIST_DATA_DIR``, one per ``<name>.parquet``) or
+  ``"jdbc"`` (queries pushed to live PostgreSQL for reference parity,
+  which alone requires the database settings);
+* ``FLOORIST_RUN_DATE`` — ``YYYY-MM-DD`` pins the partition date for
+  reproducible backfills (the reference always stamps "today").
 * :func:`s3a_conf` — maps resolved credentials onto the Hadoop S3A keys the
   executors need (the reference does the analogous wiring through
   boto3/awswrangler at `floorist.py:70-79`).
@@ -27,8 +30,9 @@ Spark-specific additions (not in the reference):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import date
 from os import R_OK, access, environ
-from os.path import isfile
+from os.path import isdir, isfile
 from urllib.parse import urlparse
 
 try:  # Clowder is optional; absent in this environment (import-gated).
@@ -65,16 +69,21 @@ class Config:
     jdbc_url: str | None = None
     #: Driver class for the override URL (``FLOORIST_JDBC_DRIVER``).
     jdbc_driver: str | None = None
+    #: Native-mode table directory (``FLOORIST_DATA_DIR``).
+    data_dir: str | None = None
+    #: Partition date of every dump (``FLOORIST_RUN_DATE``); None is today.
+    run_date: date | None = None
 
 
-def get_config(mode: str = "jdbc") -> Config:
+def get_config(mode: str | None = None) -> Config:
     """Resolve + validate config from the environment.
 
-    ``mode="jdbc"`` reproduces the reference contract exactly (database
-    required). ``mode="native"`` drops the database requirement — Catalyst
-    owns the query surface.
+    ``mode`` overrides ``FLOORIST_MODE``. ``"jdbc"`` reproduces the
+    reference contract exactly (database required). ``"native"`` drops the
+    database requirement — Catalyst owns the query surface.
     """
-    config = Config(mode=mode)
+    config = Config()
+    config.mode = environ.get("FLOORIST_MODE", config.mode) if mode is None else mode
     _set_bucket_config(config)
     _set_database_config(config)
     _set_floorist_config(config)
@@ -119,6 +128,20 @@ def _set_database_config(config: Config) -> None:
 
 def _set_floorist_config(config: Config) -> None:
     config.floorplan_filename = environ.get("FLOORPLAN_FILE")
+    config.data_dir = environ.get("FLOORIST_DATA_DIR")
+    run_date = environ.get("FLOORIST_RUN_DATE")
+    config.run_date = _parse_run_date(run_date) if run_date else None
+
+
+def _parse_run_date(text: str) -> date:
+    """``YYYY-MM-DD`` only: ``fromisoformat`` also takes ``20250203``, so
+    the date must print back as the text."""
+    try:
+        if (run_date := date.fromisoformat(text)).isoformat() == text:
+            return run_date
+    except ValueError:
+        pass
+    raise ValueError(f"FLOORIST_RUN_DATE must be a YYYY-MM-DD date, got {text!r}")
 
 
 def _validate_config(config: Config) -> None:
@@ -134,6 +157,12 @@ def _validate_config(config: Config) -> None:
 
     if not config.bucket_name and not config.output_uri:
         raise ValueError("Bucket name not configured, set AWS_BUCKET variable.")
+
+    if config.mode not in ("native", "jdbc"):
+        raise ValueError(f"FLOORIST_MODE must be one of native, jdbc, got {config.mode!r}")
+
+    if config.data_dir and not isdir(config.data_dir):
+        raise ValueError(f"FLOORIST_DATA_DIR {config.data_dir!r} is not a directory")
 
     if config.mode == "jdbc":
         if config.jdbc_url:

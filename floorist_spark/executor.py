@@ -1,7 +1,18 @@
-"""Retry rule + per-dump executor (SURVEY §2 F7, F8, F9, F10).
+"""Floorplan, retry rule + per-dump executor (SURVEY §2 F1, F7, F8, F9, F10).
+
+A floorplan is a YAML list of dump specs::
+
+    - prefix: reports/cities
+      query: >-
+        SELECT name AS city_name, zip, country FROM cities
+      chunksize: 100
 
 Reference semantics (`/root/reference/src/floorist/floorist.py`):
 
+* **F1 floorplan** — the file is parsed with ``yaml.safe_load`` and
+  iterated in order (`floorist.py:283-287`); ``parse_floorplan`` only
+  checks that it is a list of mappings, and ``execute`` applies the row
+  rules below.
 * **F8 retry** — one rule, ``is_retryable``: a transient database error is
   retried with backoff ``RETRY_DELAY * 2**attempt`` (5s, 10s), 3 attempts
   total (`floorist.py:21-23,31-63`, pinned by
@@ -16,9 +27,13 @@ Reference semantics (`/root/reference/src/floorist/floorist.py`):
   one connection ``sources/jdbc.py`` pins per dump.
 * **F10 execute(row, dump_count)** — missing ``prefix``/``query`` is not a
   parse error: it fails that dump only and later dumps still run
-  (`floorist.py:186-197`, `tests/test_floorist.py:190-198`). So does a
-  ``chunksize`` that is neither falsy nor a positive int, before its query
-  runs.
+  (`floorist.py:186-197`, `tests/test_floorist.py:190-198`). A MISSING
+  ``chunksize`` defaults to 1000 rows/file, while an explicitly falsy one
+  (0/None) means "unchunked", a single output file (`floorist.py:194`:
+  ``row.get('chunksize', 1000) or None``); any other value that is not a
+  positive int fails its dump before the query runs. The per-dump sink
+  lines (F14, `floorist.py:165-178`) follow the file count
+  ``write_parquet`` returns.
 
 Design deviation, documented: the reference matches message patterns on
 SQLAlchemy errors (`floorist.py:221-224`). Through Spark's JDBC source a
@@ -37,13 +52,17 @@ import logging
 import time
 from collections.abc import Callable
 from datetime import date
+from typing import IO, Any
 
+import yaml
 from py4j.java_gateway import is_instance_of
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
-from floorist_spark.floorplan import DEFAULT_CHUNKSIZE
 from floorist_spark.storage import StorageClient
+
+#: Reference default rows-per-output-file (`floorist.py:194`).
+DEFAULT_CHUNKSIZE = 1000
 
 #: Reference retry envelope (`floorist.py:22-23`).
 MAX_RETRIES = 3
@@ -61,6 +80,30 @@ RETRYABLE_ERROR_PATTERNS = (
 #: admin/crash shutdown, cannot connect now, and class 08's lost connections
 #: (not 08004, a refused login, nor 08P01, a protocol violation: no retry mends them).
 RETRYABLE_SQLSTATES = ("40001", "40P01", "57P01", "57P02", "57P03", "08000", "08001", "08003", "08006", "08007")
+
+
+class FloorplanError(ValueError):
+    """Raised when the floorplan document is not a YAML list of mappings."""
+
+
+def parse_floorplan(stream: str | IO[str]) -> list[dict[str, Any]]:
+    """YAML text -> ordered list of raw rows. Rows keep missing keys so
+    ``execute`` can reproduce per-dump KeyError semantics."""
+    data = yaml.safe_load(stream)
+    if data is None:
+        return []
+    if not isinstance(data, list):
+        raise FloorplanError(f"floorplan must be a YAML list, got {type(data).__name__}")
+    for i, row in enumerate(data):
+        if not isinstance(row, dict):
+            raise FloorplanError(f"floorplan row {i} must be a mapping, got {type(row).__name__}")
+    return data
+
+
+def load_floorplan(path: str) -> list[dict[str, Any]]:
+    """Load floorplan rows from a file path (F1)."""
+    with open(path) as fh:
+        return parse_floorplan(fh)
 
 
 def is_retryable(ex: Exception) -> bool:
@@ -110,8 +153,6 @@ class DumpExecutor:
         try:
             path, target = self.storage.make_path(row["prefix"], self.run_date)
             query = row["query"]
-            # missing chunksize defaults to 1000; explicit 0/None → unchunked
-            # (`floorist.py:194`); any other value must be a positive int
             chunksize = row.get("chunksize", DEFAULT_CHUNKSIZE) or None
             if chunksize is not None and (type(chunksize) is not int or chunksize < 1):
                 raise ValueError(f"chunksize must be a positive integer, got {chunksize!r}")
@@ -139,7 +180,11 @@ class DumpExecutor:
 
                 logging.debug("[Dump #%d] Query: %s", dump_count, query)
                 df = self.query_runner(query)
-                self.storage.write_parquet(df, target, chunksize=chunksize, dump_count=dump_count)
+                files = self.storage.write_parquet(df, target, chunksize=chunksize)
+                if not files:
+                    logging.info("[Dump #%d] Empty folder created for empty result", dump_count)
+                for chunk in range(1, files + 1):
+                    logging.info("[Dump #%d] Written parquet chunk #%d", dump_count, chunk)
                 logging.debug("[Dump #%d] Dumped %s to %s", dump_count, query, path)
                 return True
 

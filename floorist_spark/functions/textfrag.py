@@ -251,7 +251,6 @@ ODD_HEX = "('1','3','5','7','9','b','d','f')"
 #: hex digits with bit 1 set — the second independent bit per digit, used
 #: for bits j>=half so one 32-digit md5 yields up to 64 SimHash bits
 BIT1_HEX = "('2','3','6','7','a','b','e','f')"
-_ODD_HEX = ODD_HEX
 
 
 def digests_duck(tokens: str) -> str:

@@ -56,7 +56,6 @@ NBANDS = 8
 NROWS = 4
 SHINGLE_K = 5
 SIMHASH_BITS = 60
-SIMHASH_CHUNK_BITS = 15  # 4 pigeonhole chunks for hamming <= 3
 JACCARD_THRESHOLD = 0.8
 
 #: Degenerate-bucket guard: band buckets with more members than this are
@@ -332,17 +331,6 @@ def lsh_overflow_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band", "sig")
         .agg(F.count("*").alias("bucket_size"))
         .filter(F.col("bucket_size") > MAX_BAND_BUCKET)
-    )
-
-
-def _band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capped band rows — the candidate-join input: over-cap buckets are
-    removed with a broadcast anti-join (the over-cap set is tiny by
-    construction: it only contains pathological signatures)."""
-    return _raw_band_rows(spark, sf_dir).join(
-        F.broadcast(lsh_overflow_buckets(spark, sf_dir).select("band", "sig")),
-        ["band", "sig"],
-        "left_anti",
     )
 
 

@@ -193,11 +193,7 @@ def _sized_events_state(spark: SparkSession, sf_dir: str, *key_cols: str):
         sized_state,
     )
 
-    n_rows, n_keys = batch_stats(
-        load_table(spark, sf_dir, "events"),
-        *key_cols,
-        cache_key=(os.path.realpath(sf_dir), "events"),
-    )
+    n_rows, n_keys = batch_stats(load_table(spark, sf_dir, "events"), *key_cols)
     state_bytes = n_rows * DEDUP_KEY_BYTES + n_keys * STATE_KEY_BYTES
     return sized_state(spark, state_bytes, n_rows)
 
@@ -1531,12 +1527,10 @@ FROM est ORDER BY cms_estimate DESC, user_id LIMIT {_CMS_TOP}
 # e22 — Z-order (Morton) multi-dimensional layout with locality audit
 # ---------------------------------------------------------------------------
 
-#: bits per dimension (16 buckets each) and output file count: file_id
-#: drops the low 4 Morton bits, so each file covers a 4x4 tile of the
-#: (day_bucket, user_bucket) grid — production scales bits/files up, same
-#: plan
+#: bits per dimension (16 buckets each): file_id drops the low 4 Morton
+#: bits, so each of the 16 files covers a 4x4 tile of the (day_bucket,
+#: user_bucket) grid — production scales bits/files up, same plan
 _Z_BITS = 4
-_Z_FILES = 16
 
 
 def _z_interleave(d: str, u: str, intdiv: str) -> str:

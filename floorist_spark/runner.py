@@ -15,13 +15,12 @@ Reference (`/root/reference/src/floorist/floorist.py:259-303`):
 from __future__ import annotations
 
 import logging
-from datetime import date
+import sys
 from functools import partial
 from os import environ
 
 from floorist_spark.config import Config, base_output_uri, get_config, s3a_conf
-from floorist_spark.executor import DumpExecutor
-from floorist_spark.floorplan import load_floorplan
+from floorist_spark.executor import DumpExecutor, load_floorplan
 from floorist_spark.session import get_spark, register_views
 from floorist_spark.storage import StorageClient
 
@@ -65,25 +64,17 @@ class FlooristSpark:
         else:
             from floorist_spark.operators.catalog import resolve_catalog_query
 
-            data_dir = environ.get("FLOORIST_DATA_DIR")
-            if data_dir:
-                register_views(self.spark, data_dir)
+            if config.data_dir:
+                register_views(self.spark, config.data_dir)
 
             def runner(query: str):
                 # floorplan rows can reference any catalog operator by name
                 # (`query: catalog:d04_lsh_jaccard_dedup`) — same sink path.
-                df = resolve_catalog_query(self.spark, query, data_dir)
+                df = resolve_catalog_query(self.spark, query, config.data_dir)
                 return df if df is not None else self.spark.sql(query)
 
         logging.info("Successfully connected to the database")
-
-        # FLOORIST_RUN_DATE=YYYY-MM-DD pins the partition date for
-        # reproducible backfills (the reference always stamps "today")
-        run_date = None
-        if environ.get("FLOORIST_RUN_DATE"):
-            run_date = date.fromisoformat(environ["FLOORIST_RUN_DATE"])
-
-        self.executor = DumpExecutor(self.storage, runner, run_date=run_date)
+        self.executor = DumpExecutor(self.storage, runner, run_date=config.run_date)
 
     def run(self) -> None:
         """F11: run the dumps in floorplan order, each isolated from the
@@ -98,7 +89,7 @@ class FlooristSpark:
 
         logging.info("Dumped %d from total of %d", dumped_count, len(rows))
         if dumped_count != len(rows):
-            exit(1)
+            sys.exit(1)
 
 
 def _configure_loglevel() -> None:
@@ -109,5 +100,4 @@ def _configure_loglevel() -> None:
 
 def main() -> None:
     _configure_loglevel()
-    mode = environ.get("FLOORIST_MODE", "native")
-    FlooristSpark(get_config(mode=mode)).run()
+    FlooristSpark(get_config()).run()

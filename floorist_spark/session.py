@@ -28,19 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-#: Tables the driver ships at /root/testdata/sf*/ (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -146,11 +133,15 @@ def normalize_event_time(df: DataFrame) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view so floorplan SQL can
-    reference them by name (the reference's queries named live Postgres
-    tables; native mode names these views)."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+def parquet_tables(data_dir: str) -> list[str]:
+    """The table names of ``data_dir``: ``<name>`` for every
+    ``<name>.parquet`` entry, a file or a directory of part files."""
+    return sorted(name for name, ext in map(os.path.splitext, os.listdir(data_dir)) if ext == ".parquet")
+
+
+def register_views(spark: SparkSession, data_dir: str) -> None:
+    """Register every table of ``data_dir`` as a temp view of the same name
+    so floorplan SQL can reference it (the reference's queries named live
+    Postgres tables; native mode names these views)."""
+    for name in parquet_tables(data_dir):
+        load_table(spark, data_dir, name).createOrReplaceTempView(name)

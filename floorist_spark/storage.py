@@ -35,7 +35,6 @@ Reference semantics reproduced:
 
 from __future__ import annotations
 
-import logging
 import os
 from datetime import date
 from itertools import accumulate
@@ -99,17 +98,11 @@ class StorageClient:
 
     # -- F5 / F6 -------------------------------------------------------------
 
-    def write_parquet(
-        self,
-        df: DataFrame,
-        target: str,
-        chunksize: int | None = None,
-        dump_count: int = 0,
-    ) -> int:
+    def write_parquet(self, df: DataFrame, target: str, chunksize: int | None = None) -> int:
         """Write one dump, executing its query once; returns the number of
-        Parquet files it wrote: ceil(rows/chunksize), or one file when
-        ``chunksize`` is falsy (`floorist.py:194`: falsy chunksize → one
-        pandas chunk → one file).
+        Parquet files it wrote: 0 for an empty result, ceil(rows/chunksize),
+        or one file when ``chunksize`` is falsy (`floorist.py:194`: falsy
+        chunksize → one pandas chunk → one file).
 
         The result is persisted and one job counts its rows per partition:
         emptiness (a 0-row or 0-column result takes the F6 marker path and
@@ -134,13 +127,8 @@ class StorageClient:
                     df.unpersist()
         if not rows:
             self.write_empty_marker(target)
-            logging.info("[Dump #%d] Empty folder created for empty result", dump_count)
             return 0
-
-        files = -(-rows // chunksize) if chunksize else 1
-        for chunk in range(1, files + 1):
-            logging.info("[Dump #%d] Written parquet chunk #%d", dump_count, chunk)
-        return files
+        return -(-rows // chunksize) if chunksize else 1
 
     def _plan_writer(self, df: DataFrame, chunksize: int | None, counts: dict[int, int]) -> DataFrame:
         """Shape the writer input so chunk k is the k-th page of ``chunksize``
@@ -183,11 +171,9 @@ class StorageClient:
 
     def cleanup(self, target: str) -> None:
         """Delete everything under the target prefix (`floorist.py:112-113`).
-        Recursive so partially-written chunks from a failed attempt vanish."""
-        fs = self._fs(target)
-        p = self._jpath(target)
-        if fs.exists(p):
-            fs.delete(p, True)
+        Recursive so partially-written chunks from a failed attempt vanish;
+        a missing target is a no-op (Hadoop's ``delete`` returns false)."""
+        self._fs(target).delete(self._jpath(target), True)
 
     # -- helpers -------------------------------------------------------------
 

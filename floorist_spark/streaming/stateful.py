@@ -381,10 +381,7 @@ def e15_custom_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # two stateful operators: the event_id ingest dedup (one tiny entry
     # per event) and the per-user sessionizer state
-    n_rows, n_users = batch_stats(
-        load_table(spark, sf_dir, "events"), "user_id",
-        cache_key=(os.path.realpath(sf_dir), "events"),
-    )
+    n_rows, n_users = batch_stats(load_table(spark, sf_dir, "events"), "user_id")
     state_bytes = n_rows * DEDUP_KEY_BYTES + n_users * STATE_KEY_BYTES
     with sized_state(
         spark, state_bytes, n_rows, python_stateful=True, n_keys=n_users,
@@ -593,10 +590,7 @@ def e26_alert_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # two stateful operators: the event_id ingest dedup (one tiny entry
     # per event) and the per-(user, event_type) throttle anchors
-    n_rows, n_keys = batch_stats(
-        load_table(spark, sf_dir, "events"), "user_id", "event_type",
-        cache_key=(os.path.realpath(sf_dir), "events"),
-    )
+    n_rows, n_keys = batch_stats(load_table(spark, sf_dir, "events"), "user_id", "event_type")
     state_bytes = n_rows * DEDUP_KEY_BYTES + n_keys * STATE_KEY_BYTES
     with sized_state(
         spark, state_bytes, n_rows, python_stateful=True, n_keys=n_keys,
@@ -799,10 +793,7 @@ def e29_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # two stateful operators: the event_id ingest dedup (one tiny entry
     # per event) and the per-user partial funnel chains
-    n_rows, n_users = batch_stats(
-        load_table(spark, sf_dir, "events"), "user_id",
-        cache_key=(os.path.realpath(sf_dir), "events"),
-    )
+    n_rows, n_users = batch_stats(load_table(spark, sf_dir, "events"), "user_id")
     state_bytes = n_rows * DEDUP_KEY_BYTES + n_users * STATE_KEY_BYTES
     with sized_state(
         spark, state_bytes, n_rows, python_stateful=True, n_keys=n_users,

@@ -86,40 +86,19 @@ DEDUP_KEY_BYTES = 64
 STATE_KEY_BYTES = 256
 
 
-#: session-scoped memo of batch_stats results keyed on (session id,
-#: dataset dir, key expressions): the sizing statistic is read per
-#: streaming-query start, and min-of-2 bench entries would otherwise pay
-#: the (small) stats aggregate twice. In-memory only, same lifetime
-#: discipline as the operator memo tier (a new session gets fresh ids).
-_STATS_CACHE: dict = {}
-
-
-def batch_stats(
-    df: DataFrame, *key_cols: str, cache_key: tuple | None = None
-) -> tuple[int, int]:
+def batch_stats(df: DataFrame, *key_cols: str) -> tuple[int, int]:
     """(rows, approx distinct composite keys) of the stream's batch twin
     in ONE map-side-combined aggregate; a few percent of HLL error is
     immaterial against the /TARGET quantization. Key columns are SQL
     expressions (e.g. ``date_trunc('hour', ts)`` for a windowed agg's
-    keyspace). Pass ``cache_key`` (e.g. (sf_dir, table)) to memoize for
-    the session."""
-    full_key = None
-    if cache_key is not None:
-        sess = df.sparkSession
-        full_key = (id(sess), *cache_key, key_cols)
-        hit = _STATS_CACHE.get(full_key)
-        if hit is not None:
-            return hit
+    keyspace)."""
     exprs = [F.expr(c) for c in key_cols]
     key = exprs[0] if len(exprs) == 1 else F.xxhash64(*exprs)
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct(key).alias("k"),
     ).first()
-    out = (int(row["n"]), int(row["k"]))
-    if full_key is not None:
-        _STATS_CACHE[full_key] = out
-    return out
+    return int(row["n"]), int(row["k"])
 
 
 def state_partition_count(

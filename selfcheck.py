@@ -69,17 +69,14 @@ def main() -> int:
     import duckdb
 
     from __spark_entry__ import oracle_sql, queries
-    from floorist_spark.session import TESTDATA_TABLES, get_spark
+    from floorist_spark.session import get_spark, parquet_tables
     from tests.oracle_compare import check_type_parity, compare_results
 
     spark = get_spark("selfcheck")
     con = duckdb.connect()
-    for t in TESTDATA_TABLES:
+    for t in parquet_tables(SF_DIR):
         path = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
     qs, oracles = queries(), oracle_sql()
     failed = []

@@ -127,11 +127,10 @@ def duck():
     import duckdb
 
     con = duckdb.connect()
-    from floorist_spark.session import TESTDATA_TABLES
+    from floorist_spark.session import parquet_tables
 
-    for t in TESTDATA_TABLES:
+    for t in parquet_tables(SF_CORRECTNESS):
         path = os.path.join(SF_CORRECTNESS, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()

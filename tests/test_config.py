@@ -3,6 +3,8 @@ pinned by `tests/test_floorist.py:45-105`)."""
 
 from __future__ import annotations
 
+from datetime import date
+
 import pytest
 
 from floorist_spark.config import base_output_uri, get_config, s3a_conf
@@ -30,6 +32,8 @@ def env(monkeypatch, tmp_path):
     monkeypatch.delenv("FLOORIST_OUTPUT_URI", raising=False)
     monkeypatch.delenv("FLOORIST_JDBC_URL", raising=False)
     monkeypatch.delenv("FLOORIST_JDBC_DRIVER", raising=False)
+    for var in ("FLOORIST_MODE", "FLOORIST_DATA_DIR", "FLOORIST_RUN_DATE"):
+        monkeypatch.delenv(var, raising=False)
     return monkeypatch
 
 
@@ -95,6 +99,40 @@ def test_native_mode_does_not_require_database(env):
         env.delenv(var)
     cfg = get_config(mode="native")
     assert cfg.mode == "native"
+
+
+def test_mode_defaults_to_native(env):
+    assert get_config().mode == "native"
+    env.setenv("FLOORIST_MODE", "jdbc")
+    assert get_config().mode == "jdbc"
+    assert get_config(mode="native").mode == "native"  # the argument wins
+
+
+def test_unknown_mode_raises(env):
+    env.setenv("FLOORIST_MODE", "postgres")
+    with pytest.raises(ValueError, match="FLOORIST_MODE must be one of native, jdbc, got 'postgres'"):
+        get_config()
+
+
+def test_run_date_and_data_dir_resolve(env, tmp_path):
+    env.setenv("FLOORIST_RUN_DATE", "2025-02-03")
+    env.setenv("FLOORIST_DATA_DIR", str(tmp_path))
+    cfg = get_config()
+    assert cfg.run_date == date(2025, 2, 3)
+    assert cfg.data_dir == str(tmp_path)
+
+
+@pytest.mark.parametrize("text", ["2025-13-01", "20250203", "2025-2-3", "yesterday"])
+def test_malformed_run_date_names_the_variable(env, text):
+    env.setenv("FLOORIST_RUN_DATE", text)
+    with pytest.raises(ValueError, match=f"FLOORIST_RUN_DATE must be a YYYY-MM-DD date, got '{text}'"):
+        get_config()
+
+
+def test_missing_data_dir_names_the_variable(env, tmp_path):
+    env.setenv("FLOORIST_DATA_DIR", str(tmp_path / "no_such_dir"))
+    with pytest.raises(ValueError, match="FLOORIST_DATA_DIR .* is not a directory"):
+        get_config()
 
 
 def test_endpoint_scheme_defaulting(env):

@@ -42,37 +42,45 @@ def test_continuous_aggregate_across_runs(spark, tmp_path):
         ],
         os.path.join(sf_dir, "events.parquet"),
     )
-    work = str(tmp_path / "work")
-    r1 = {
-        (r["window_start"], r["event_type"]): r
-        for r in e16_continuous_aggregate(spark, sf_dir, work=work).collect()
-    }
-    assert r1[(m(0), "view")]["n_events"] == 2
-    assert r1[(m(0), "view")]["total_value"] == 3.5
+    # the landing dir lives under the system temp dir, keyed on sf_dir's
+    # path, and keeps regular files across runs on purpose: a file an
+    # earlier test session left there would be read as new data
+    stream = _stream_dir_for(sf_dir, "events")
+    shutil.rmtree(stream)
+    try:
+        work = str(tmp_path / "work")
+        r1 = {
+            (r["window_start"], r["event_type"]): r
+            for r in e16_continuous_aggregate(spark, sf_dir, work=work).collect()
+        }
+        assert r1[(m(0), "view")]["n_events"] == 2
+        assert r1[(m(0), "view")]["total_value"] == 3.5
 
-    # "next cron run": a new file lands (the stream dir is what the
-    # source lists); hour 9 gains a row, hour 11 appears
-    _flat_parquet(
-        spark,
-        [(4, m(20), 3, "view", 0.75), (5, m(125), 1, "view", 9.0)],
-        os.path.join(_stream_dir_for(sf_dir, "events"), "more.parquet"),
-    )
-    r2 = {
-        (r["window_start"], r["event_type"]): r
-        for r in e16_continuous_aggregate(spark, sf_dir, work=work).collect()
-    }
-    # hour 9's count now merges partials from BOTH runs
-    assert r2[(m(0), "view")]["n_events"] == 3
-    assert r2[(m(0), "view")]["total_value"] == 4.25
-    assert r2[(m(60), "click")]["n_events"] == 1
-    assert r2[(m(120), "view")]["n_events"] == 1
-    assert len(r2) == 3
+        # "next cron run": a new file lands (the stream dir is what the
+        # source lists); hour 9 gains a row, hour 11 appears
+        _flat_parquet(
+            spark,
+            [(4, m(20), 3, "view", 0.75), (5, m(125), 1, "view", 9.0)],
+            os.path.join(stream, "more.parquet"),
+        )
+        r2 = {
+            (r["window_start"], r["event_type"]): r
+            for r in e16_continuous_aggregate(spark, sf_dir, work=work).collect()
+        }
+        # hour 9's count now merges partials from BOTH runs
+        assert r2[(m(0), "view")]["n_events"] == 3
+        assert r2[(m(0), "view")]["total_value"] == 4.25
+        assert r2[(m(60), "click")]["n_events"] == 1
+        assert r2[(m(120), "view")]["n_events"] == 1
+        assert len(r2) == 3
 
-    # exactly-once: the partials store holds run-1 partials + ONLY the new
-    # file's partials (2 + 2 rows) — file 1 was not reprocessed
-    partials = spark.read.parquet(os.path.join(work, "partials"))
-    assert partials.count() == 4
-    assert partials.agg(F.sum("pn")).collect()[0][0] == 5
+        # exactly-once: the partials store holds run-1 partials + ONLY the new
+        # file's partials (2 + 2 rows) — file 1 was not reprocessed
+        partials = spark.read.parquet(os.path.join(work, "partials"))
+        assert partials.count() == 4
+        assert partials.agg(F.sum("pn")).collect()[0][0] == 5
+    finally:
+        shutil.rmtree(stream, ignore_errors=True)
 
 
 def test_partial_write_is_idempotent_on_batch_replay(spark, tmp_path):

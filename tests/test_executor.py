@@ -7,27 +7,27 @@ from datetime import date
 
 import pytest
 
-from floorist_spark.executor import DumpExecutor, is_retryable
-from floorist_spark.floorplan import DEFAULT_CHUNKSIZE, parse_floorplan
+from floorist_spark.executor import DEFAULT_CHUNKSIZE, DumpExecutor, is_retryable, parse_floorplan
 
 
 class FakeStorage:
     """Driver-side double: records sink calls, optionally fails them."""
 
-    def __init__(self, cleanup_error: Exception | None = None):
+    def __init__(self, cleanup_error: Exception | None = None, files: int = 1):
         self.base_uri = "file:///fake"
         self.writes: list[tuple] = []
         self.cleanups: list[str] = []
         self.cleanup_error = cleanup_error
+        self.files = files
 
     def make_path(self, prefix, run_date=None):
         d = run_date or date(2026, 1, 2)
         path = f"{prefix}/year_created={d.year}/month_created={d.month}/day_created={d.day}"
         return path, f"{self.base_uri}/{path}"
 
-    def write_parquet(self, df, target, chunksize=None, dump_count=0):
+    def write_parquet(self, df, target, chunksize=None):
         self.writes.append((df, target, chunksize))
-        return 1
+        return self.files
 
     def cleanup(self, target):
         if self.cleanup_error:
@@ -229,3 +229,18 @@ def test_malformed_chunksize_fails_dump_before_query(chunksize, caplog):
     assert repr(chunksize) in caplog.text
     assert ex.execute({**ROW, "chunksize": 7}, 2) is True
     assert [w[2] for w in storage.writes] == [7]
+
+
+@pytest.mark.parametrize(
+    "files, lines",
+    [
+        (3, [f"[Dump #4] Written parquet chunk #{k}" for k in (1, 2, 3)]),
+        (0, ["[Dump #4] Empty folder created for empty result"]),
+    ],
+)
+def test_per_dump_lines_follow_the_file_count(files, lines, caplog):
+    # the sink returns its file count; the executor logs one line per file,
+    # or the empty-result line (reference floorist.py:102-110,197)
+    caplog.set_level("INFO")
+    assert make_executor(FakeStorage(files=files), FlakyRunner()).execute(ROW, 4) is True
+    assert [r.getMessage() for r in caplog.records if r.levelname == "INFO"] == lines

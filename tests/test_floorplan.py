@@ -10,7 +10,7 @@ import logging
 
 import pytest
 
-from floorist_spark.floorplan import (
+from floorist_spark.executor import (
     DEFAULT_CHUNKSIZE,
     FloorplanError,
     load_floorplan,

@@ -28,15 +28,12 @@ def _pairs():
 def duck_smoke():
     import duckdb
 
-    from floorist_spark.session import TESTDATA_TABLES
+    from floorist_spark.session import parquet_tables
 
     con = duckdb.connect()
-    for t in TESTDATA_TABLES:
+    for t in parquet_tables(SF_SMOKE):
         path = os.path.join(SF_SMOKE, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
 

@@ -417,9 +417,7 @@ def test_jdbc_serialization_failure_retries_after_cleanup(spark, pg_server, seed
     assert back == [(x, 1) for x in range(1, 101)]
 
 
-def test_jdbc_undefined_table_fails_at_once_and_run_exits_1(
-    spark, pg_server, seeded, tmp_path, monkeypatch
-):
+def test_jdbc_undefined_table_fails_at_once_and_run_exits_1(spark, pg_server, seeded, tmp_path):
     # SQLSTATE 42P01 is not transient: one attempt and no backoff. The
     # later valid dump is still written, and the run exits 1 (F10/F11).
     from floorist_spark.runner import FlooristSpark
@@ -436,7 +434,7 @@ def test_jdbc_undefined_table_fails_at_once_and_run_exits_1(
     cfg = pg_config(pg_server)
     cfg.floorplan_filename = str(plan)
     cfg.output_uri = f"file://{out}"
-    monkeypatch.setenv("FLOORIST_RUN_DATE", RUN_DATE.isoformat())
+    cfg.run_date = RUN_DATE
     engine = FlooristSpark(cfg, spark=spark)
     calls, sleeps = [], []
     build = engine.executor.query_runner

@@ -11,8 +11,13 @@ import yaml
 from hypothesis import given
 from hypothesis import strategies as st
 
-from floorist_spark.executor import MAX_RETRIES, RETRY_DELAY, RETRYABLE_ERROR_PATTERNS
-from floorist_spark.floorplan import DEFAULT_CHUNKSIZE, parse_floorplan
+from floorist_spark.executor import (
+    DEFAULT_CHUNKSIZE,
+    MAX_RETRIES,
+    RETRY_DELAY,
+    RETRYABLE_ERROR_PATTERNS,
+    parse_floorplan,
+)
 from floorist_spark.functions.textfrag import MERSENNE31, _affine_coef
 from tests.test_executor import FakeStorage, FlakyRunner, make_executor
 

@@ -42,7 +42,7 @@ PLAN_WITH_FAILURE = """
 
 @pytest.fixture
 def runner_factory(spark, tmp_path):
-    def make(plan_text: str) -> tuple[FlooristSpark, str]:
+    def make(plan_text: str, **settings) -> tuple[FlooristSpark, str]:
         plan = tmp_path / "floorplan.yaml"
         plan.write_text(plan_text)
         out = tmp_path / "out"
@@ -51,6 +51,7 @@ def runner_factory(spark, tmp_path):
             floorplan_filename=str(plan),
             output_uri=f"file://{out}",
             mode="native",
+            **settings,
         )
         return FlooristSpark(cfg, spark=spark), str(out)
 
@@ -124,13 +125,13 @@ def test_startup_logs_connected(runner_factory, caplog):
     assert "Successfully connected to the database" in caplog.text
 
 
-def test_catalog_query_export(runner_factory, spark, monkeypatch, caplog):
+def test_catalog_query_export(runner_factory, spark, caplog):
     # floorplan rows can export any operator-catalog entry by name
     caplog.set_level(logging.INFO)
-    monkeypatch.setenv("FLOORIST_DATA_DIR", "/root/testdata/sf0.001")
     runner, out = runner_factory(
         "- prefix: exports/catalog\n  query: catalog:q11_pricing_summary\n"
-        "- prefix: exports/catalog_bad\n  query: catalog:nope\n"
+        "- prefix: exports/catalog_bad\n  query: catalog:nope\n",
+        data_dir="/root/testdata/sf0.001",
     )
     with pytest.raises(SystemExit):  # unknown name fails ONLY that dump
         runner.run()
@@ -139,11 +140,10 @@ def test_catalog_query_export(runner_factory, spark, monkeypatch, caplog):
     assert "Dumped 1 from total of 2" in caplog.text
 
 
-def test_catalog_query_without_data_dir_fails_fast(runner_factory, monkeypatch, caplog):
+def test_catalog_query_without_data_dir_fails_fast(runner_factory, caplog):
     # a catalog query with no FLOORIST_DATA_DIR must fail the dump loudly,
     # never silently export bundled testdata to the real sink
     caplog.set_level(logging.INFO)
-    monkeypatch.delenv("FLOORIST_DATA_DIR", raising=False)
     runner, out = runner_factory(
         "- prefix: exports/guard\n  query: catalog:q11_pricing_summary\n"
         "- prefix: exports/ok\n  query: SELECT 1 AS x\n"
@@ -165,16 +165,33 @@ def test_unknown_catalog_name_suggests_close_matches(spark):
     assert "q11_pricing_summary" in str(exc.value)
 
 
-def test_run_date_backfill(runner_factory, spark, monkeypatch):
+def test_run_date_backfill(runner_factory, spark):
     # FLOORIST_RUN_DATE pins the partition path for reproducible backfills
-    monkeypatch.setenv("FLOORIST_RUN_DATE", "2025-02-03")
-    runner, out = runner_factory("- prefix: exports/backfill\n  query: SELECT 1 AS x\n")
+    runner, out = runner_factory(
+        "- prefix: exports/backfill\n  query: SELECT 1 AS x\n", run_date=date(2025, 2, 3)
+    )
     runner.run()
     d = os.path.join(
         out, "exports/backfill", "year_created=2025", "month_created=2", "day_created=3"
     )
     assert os.path.isdir(d)
     assert spark.read.parquet(f"file://{d}").count() == 1
+
+
+def test_native_views_come_from_the_data_dir(runner_factory, spark, tmp_path):
+    # every <name>.parquet in FLOORIST_DATA_DIR is a view, whatever its name
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    data = tmp_path / "data"
+    data.mkdir()
+    pq.write_table(pa.table({"id": [1, 2, 3], "amount": [9.5, 0.25, 4.0]}), data / "invoices.parquet")
+    runner, out = runner_factory(
+        "- prefix: exports/invoices\n  query: SELECT * FROM invoices\n", data_dir=str(data)
+    )
+    runner.run()
+    rows = spark.read.parquet(f"file://{_day_dir(out, 'exports/invoices')}").collect()
+    assert sorted(tuple(r) for r in rows) == [(1, 9.5), (2, 0.25), (3, 4.0)]
 
 
 def test_cron_jvm_profile_reaches_jvm_before_deployment_options(tmp_path):
