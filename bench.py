@@ -1,6 +1,6 @@
 """Headline benchmark: times the engine's representative queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]``, else ``local[*]``, and prints ONE JSON line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q11_pricing_summary": sec, ...}, "sf": 0.1}
@@ -313,8 +313,8 @@ def main() -> int:
     # and spin up the Python worker pool (pandas import per worker) so the
     # first mapInPandas query measures steady-state, not pool cold-start
     load_table(spark, SF_DIR, "lineitem").count()
-    n = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark.range(n * 2).repartition(n).mapInPandas(
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(cpus * 2).repartition(cpus).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 
@@ -558,7 +558,7 @@ def main() -> int:
         "unit": "sec",
         "queries": timings,
         "sf": _sf_from_dir(SF_DIR),
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)),
+        "cpus": cpus,
         "calibration_sec": {"start": calib_start, "end": calib_end},
     }
     if stream_floor is not None:

@@ -5,14 +5,12 @@ connection (`/root/reference/src/floorist/floorist.py:123-128`). Here the
 SparkSession is the engine: Catalyst owns the query surface the reference
 delegated to PostgreSQL.
 
-Only the confs that differ from Spark's own defaults are set, sized for
-the test/bench environment (single JVM, local[N]) but meaning the same on
-a real cluster:
-
-* shuffle.partitions sized to cores locally; on a 1000-executor cluster
-  this would be set to ~2-3x total cores (AQE, on by default, coalesces
-  down).
-* Arrow enabled — every pandas UDF / toPandas crosses via Arrow batches.
+Spark sizes the session: the master is ``local[$SPARK_GRAFT_CPUS]``, else
+``local[*]``, whose JVM count honours CPU affinity and the cgroup CPU quota
+(JDK 17); ``SPARK_MASTER`` leaves it to the deployment. Shuffle partitions
+are the ``defaultParallelism`` the session reports at start. The other
+confs set differ from Spark's defaults, e.g. Arrow on, and no console
+progress bar (its redraws would share stderr lines with a cron run's log).
 
 JVM flags are not set here: a cron run's JVM profile (C1 JIT, serial GC)
 is the runner's ``CRON_JVM_CONF``, passed through ``extra_conf`` only when
@@ -29,29 +27,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
 
-def default_parallelism() -> int:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus:
-        return int(cpus)
-    return os.cpu_count() or 8
-
-
 def get_spark(
     app_name: str = "floorist_spark",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine session.
 
-    The master is ``local[$SPARK_GRAFT_CPUS]`` unless ``SPARK_MASTER`` is
-    set; on a real cluster the deployment (spark-submit / k8s operator)
-    sets the master and these conf defaults still apply. ``getOrCreate``
-    applies the builder's confs to a session that already exists too, and
-    an ``extra_conf`` key wins over the default set here.
+    The master is ``local[$SPARK_GRAFT_CPUS]``, else ``local[*]``, unless
+    ``SPARK_MASTER`` is set; on a real cluster the deployment (spark-submit
+    / k8s operator) sets the master and these conf defaults still apply.
+    ``getOrCreate`` applies the builder's confs to a session that already
+    exists too, and an ``extra_conf`` key wins over any default set here.
     """
-    n = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # events.ts has shipped as TIMESTAMP(NANOS) in some testdata
@@ -63,6 +52,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # keep managed-table data (bucketed tables etc.) out of the repo cwd
         .config(
@@ -85,10 +75,14 @@ def get_spark(
             "spark.driver.extraClassPath", os.pathsep.join(jar_list)
         )
     if "SPARK_MASTER" not in os.environ:
-        builder = builder.master(f"local[{n}]")
-    for k, v in (extra_conf or {}).items():
+        builder = builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS') or '*'}]")
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in extra_conf:
+        spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -107,9 +101,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from the live cursor); an engine that owns its sources must coerce at
     the boundary instead. Row-local projection — no shuffle, stays in
     codegen; DuckDB normalizes identically on the oracle side (ns
-    truncation / naive-as-UTC)."""
+    truncation / naive-as-UTC). An ``events`` table without ``ts`` (any
+    data-dir table is a view) is read as it is."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
+    if name == "events" and "ts" in df.columns:
         df = normalize_event_time(df)
     return df
 

@@ -177,9 +177,6 @@ class StorageClient:
 
     # -- helpers -------------------------------------------------------------
 
-    def exists(self, uri: str) -> bool:
-        return self._fs(uri).exists(self._jpath(uri))
-
     def list_parquet_files(self, target: str) -> list[str]:
         """Recursive listing of data files under ``target`` (excludes
         _SUCCESS and hidden files) — the test surface for chunk-count

@@ -111,7 +111,7 @@ def test_f6_empty_marker_is_zero_byte_trailing_slash_object(spark, s3):
     df = spark.range(1).filter("id < 0")  # 0 rows
     n = s3.write_parquet(df, target, chunksize=1000)
     assert n == 0
-    assert s3.exists(target)
+    assert s3._fs(target).exists(s3._jpath(target))
     assert s3.list_parquet_files(target) == []
     status = s3._fs(target).getFileStatus(s3._jpath(target))
     assert status.isDirectory()  # S3A surfaces the marker object as a dir
@@ -140,5 +140,5 @@ def test_f7_cleanup_removes_every_object_under_prefix(spark, s3):
     s3.write_parquet(spark.range(100).selectExpr("id AS n"), target, chunksize=10)
     assert len(s3.list_parquet_files(target)) == 10
     s3.cleanup(target)
-    assert not s3.exists(target)
+    assert not s3._fs(target).exists(s3._jpath(target))
     assert s3.list_parquet_files(target) == []

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import re
 import subprocess
 import sys
 import textwrap
@@ -179,73 +180,142 @@ def test_run_date_backfill(runner_factory, spark):
 
 
 def test_native_views_come_from_the_data_dir(runner_factory, spark, tmp_path):
-    # every <name>.parquet in FLOORIST_DATA_DIR is a view, whatever its name
+    # every <name>.parquet in FLOORIST_DATA_DIR is a view, whatever its name;
+    # an events table without ts is read as it is, not normalized
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    tables = {
+        "invoices": {"id": [1, 2, 3], "amount": [9.5, 0.25, 4.0]},
+        "events": {"id": [1, 2], "kind": ["click", "view"]},
+    }
     data = tmp_path / "data"
     data.mkdir()
-    pq.write_table(pa.table({"id": [1, 2, 3], "amount": [9.5, 0.25, 4.0]}), data / "invoices.parquet")
-    runner, out = runner_factory(
-        "- prefix: exports/invoices\n  query: SELECT * FROM invoices\n", data_dir=str(data)
-    )
+    for name, columns in tables.items():
+        pq.write_table(pa.table(columns), data / f"{name}.parquet")
+    plan = "".join(f"- prefix: exports/{name}\n  query: SELECT * FROM {name}\n" for name in tables)
+    runner, out = runner_factory(plan, data_dir=str(data))
     runner.run()
-    rows = spark.read.parquet(f"file://{_day_dir(out, 'exports/invoices')}").collect()
-    assert sorted(tuple(r) for r in rows) == [(1, 9.5), (2, 0.25), (3, 4.0)]
+    for name, columns in tables.items():
+        rows = spark.read.parquet(f"file://{_day_dir(out, f'exports/{name}')}").collect()
+        assert sorted(tuple(r) for r in rows) == sorted(zip(*columns.values()))
 
 
-def test_cron_jvm_profile_reaches_jvm_before_deployment_options(tmp_path):
-    # the test session's JVM already exists, so a JVM that FlooristSpark
-    # launches itself can only be seen from a fresh process
-    conf_dir = tmp_path / "conf"
-    conf_dir.mkdir()
-    (conf_dir / "spark-defaults.conf").write_text(
-        "spark.driver.extraJavaOptions -Dfloorist.probe=1\n"
+def _fresh_python(code: str, cwd, env: dict[str, str]) -> tuple[str, str]:
+    """Run ``code`` in a new interpreter and return its (stdout, stderr).
+
+    The test session's JVM already exists, so a JVM that ``get_spark`` or
+    ``FlooristSpark`` launches can only be seen from a fresh process. The
+    child starts without the suite's ``FLOORIST_*``, ``SPARK_MASTER`` and
+    ``SPARK_GRAFT_CPUS``, with ``env`` on top. Output is decoded without
+    newline translation, so a bare carriage return stays visible."""
+    base = {
+        k: v
+        for k, v in os.environ.items()
+        if not k.startswith("FLOORIST_") and k not in ("SPARK_MASTER", "SPARK_GRAFT_CPUS", "PYTHONPATH")
+    }
+    base.update(PYTHONPATH=REPO, SPARK_GRAFT_WAREHOUSE=str(cwd / "warehouse"))
+    proc = subprocess.run(
+        [sys.executable, "-c", textwrap.dedent(code)],
+        env={**base, **env},
+        cwd=cwd,
+        capture_output=True,
+        timeout=300,
     )
-    out = tmp_path / "out"
-    out.mkdir()
-    probe = textwrap.dedent(
-        f"""
-        import json
-        from floorist_spark.config import Config
-        from floorist_spark.runner import FlooristSpark
+    stdout, stderr = proc.stdout.decode(), proc.stderr.decode()
+    assert proc.returncode == 0, stderr[-4000:]
+    return stdout, stderr
 
-        engine = FlooristSpark(Config(output_uri="file://{out}", mode="native"))
+
+@pytest.fixture(scope="module")
+def cron_run(tmp_path_factory):
+    """One cron run in a fresh process: ``main()``'s steps, with the JVM's
+    launch arguments and profile printed between start-up and the run.
+    The deployment's ``spark-defaults.conf`` adds its own JVM option. The
+    dump sleeps 1.5 s in its task, longer than the 0.5 s after which
+    Spark's console progress bar would draw a stage."""
+    tmp = tmp_path_factory.mktemp("cron")
+    conf_dir = tmp / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text("spark.driver.extraJavaOptions -Dfloorist.probe=1\n")
+    (tmp / "out").mkdir()
+    (tmp / "floorplan.yaml").write_text(
+        "- prefix: exports/slow\n  query: SELECT reflect('java.lang.Thread', 'sleep', 1500L) AS slept\n"
+    )
+    probe = """
+        import json
+        from floorist_spark.config import get_config
+        from floorist_spark.runner import FlooristSpark, _configure_loglevel
+
+        _configure_loglevel()
+        engine = FlooristSpark(get_config())
         jvm = engine.spark._jvm
         mx = jvm.java.lang.management.ManagementFactory
         diag = mx.getPlatformMXBean(
             jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
         )
-        print(json.dumps({{
+        print(json.dumps({
             "args": list(mx.getRuntimeMXBean().getInputArguments()),
             "tier": diag.getVMOption("TieredStopAtLevel").getValue(),
             "serial_gc": diag.getVMOption("UseSerialGC").getValue(),
-        }}))
-        engine.spark.stop()
+        }))
+        engine.run()
         """
-    )
     env = {
-        k: v
-        for k, v in os.environ.items()
-        if not k.startswith("FLOORIST_") and k not in ("SPARK_MASTER", "PYTHONPATH")
+        "SPARK_CONF_DIR": str(conf_dir),
+        "FLOORIST_OUTPUT_URI": f"file://{tmp / 'out'}",
+        "FLOORPLAN_FILE": str(tmp / "floorplan.yaml"),
     }
-    env.update(
-        PYTHONPATH=REPO,
-        SPARK_CONF_DIR=str(conf_dir),
-        SPARK_GRAFT_WAREHOUSE=str(tmp_path / "warehouse"),
-    )
-    proc = subprocess.run(
-        [sys.executable, "-c", probe],
-        env=env,
-        cwd=tmp_path,
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    seen = json.loads(proc.stdout.strip().splitlines()[-1])
+    stdout, stderr = _fresh_python(probe, tmp, env)
+    return json.loads(stdout.strip().splitlines()[-1]), stderr
+
+
+def test_cron_jvm_profile_reaches_jvm_before_deployment_options(cron_run):
+    seen, _ = cron_run
     args = seen["args"]
     assert "-XX:TieredStopAtLevel=1" in args and "-Dfloorist.probe=1" in args, args
     assert args.index("-XX:TieredStopAtLevel=1") < args.index("-Dfloorist.probe=1")
     assert seen["tier"] == "1"
     assert seen["serial_gc"] == "true"
+
+
+def test_cron_run_log_has_no_progress_bar(cron_run):
+    _, stderr = cron_run
+    assert "[Stage" not in stderr, stderr[-2000:]
+    # every record of the run's own log starts its own line with "["
+    record = re.compile(r"\[\d{4}-\d\d-\d\d \d\d:\d\d:\d\d,\d{3}\] \[[A-Z]+\] ")
+    lines = stderr.split("\n")
+    records = [line for line in lines if record.search(line)]
+    assert records and all(record.match(line) for line in records), records
+    assert any(line.endswith("Dumped 1 from total of 1") for line in records), records
+
+
+def test_session_sizes_itself_from_the_jvm(tmp_path):
+    # pinned to one CPU without SPARK_GRAFT_CPUS, the JVM's own count sizes
+    # the session; SPARK_GRAFT_CPUS still wins, and so does an extra_conf
+    # shuffle-partition value. A stopped session leaves the JVM running, so
+    # the three sessions share one JVM launch, with the cron profile. The
+    # child pins itself: a preexec_fn would run after fork in this threaded
+    # test process.
+    probe = """
+        import json, os
+        os.sched_setaffinity(0, {min(os.sched_getaffinity(0))})
+        from floorist_spark.runner import CRON_JVM_CONF
+        from floorist_spark.session import get_spark
+
+        def sized(spark):
+            return [spark.sparkContext.defaultParallelism, spark.conf.get("spark.sql.shuffle.partitions")]
+
+        spark = get_spark("sizing", extra_conf=CRON_JVM_CONF)
+        seen = {"jvm": sized(spark)}
+        spark.stop()
+        os.environ["SPARK_GRAFT_CPUS"] = "2"
+        spark = get_spark("sizing")
+        seen["env"] = sized(spark)
+        seen["extra_conf"] = sized(get_spark("sizing", extra_conf={"spark.sql.shuffle.partitions": "7"}))
+        spark.stop()
+        print(json.dumps(seen))
+        """
+    stdout, _ = _fresh_python(probe, tmp_path, {})
+    seen = json.loads(stdout.strip().splitlines()[-1])
+    assert seen == {"jvm": [1, "1"], "env": [2, "2"], "extra_conf": [2, "7"]}

@@ -312,9 +312,9 @@ def test_cleanup_removes_prefix(spark, storage):
     df = spark.range(0, 10).select(F.col("id").alias("n"))
     _, target = storage.make_path("clean", run_date=date(2026, 1, 2))
     storage.write_parquet(df, target, chunksize=None)
-    assert storage.exists(target)
+    assert os.path.isdir(_local(target)) and storage.list_parquet_files(target)
     storage.cleanup(target)
-    assert not storage.exists(target)
+    assert not os.path.exists(_local(target))
     assert storage.list_parquet_files(target) == []
 
 

@@ -34,7 +34,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
     load_table(spark, SF_DIR, "lineitem").count()
-    n = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    n = spark.sparkContext.defaultParallelism
     spark.range(n * 2).repartition(n).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
