@@ -6,7 +6,7 @@ PYTEST ?= python -m pytest
 COMPOSE = docker compose -f tests/compose/docker-compose.yml
 PY_TARGETS = floorist_spark tests tools __spark_entry__.py bench.py selfcheck.py
 
-.PHONY: all format check lint test verify bench compose-up compose-down
+.PHONY: all format check lint test slow verify bench compose-up compose-down
 
 all: lint test
 
@@ -30,6 +30,10 @@ lint:
 
 test:
 	$(PYTEST) -q
+
+# the whole slow tier (full oracle sweep, per-operator suites, slow marks)
+slow:
+	FLOORIST_SLOW_TESTS=1 $(PYTEST) -q
 
 # driver-contract simulation: every queries() entry vs its DuckDB oracle
 verify:

@@ -21,6 +21,12 @@ A second tier, :func:`memo`, deliberately SURVIVES the per-entry release:
 it holds the few intermediates shared ACROSS entries (the dedup signature
 chain), bounded to one dataset dir at a time — see its docstring.
 
+One rule covers both tiers: ``persist()`` only marks a DataFrame for
+reuse, and the first query that reads it fills it. Neither a memo nor an
+operator builder runs an action just to fill a cache, so a dump's shared
+intermediates execute inside the dump's own query — one pass that feeds
+every consumer in its plan — not in jobs of their own while it is built.
+
 Caveat: tracked DataFrames include ``localCheckpoint`` results (d09's final
 label table), whose lineage is truncated — after release they can be
 neither read nor recomputed. The contract is therefore: a catalog entry's
@@ -70,9 +76,11 @@ def _drain_memo_aux() -> None:
 
 def memo(spark, name: str, sf_dir: str, build):
     """Session-lifetime memo for a persisted intermediate keyed by
-    (name, dataset dir). On hit, returns the already-materialized
-    DataFrame; on miss, builds, persists (MEMORY_AND_DISK), eagerly
-    materializes, and records it.
+    (name, dataset dir). On hit, returns the persisted DataFrame; on
+    miss, builds, persists (MEMORY_AND_DISK) and records it. Nothing is
+    executed here: the first query that reads the memo fills it, and
+    every later reader (in the same plan or a later entry) reads the
+    cached copy.
 
     Memory stays bounded: memos for any OTHER dataset dir or a different
     SparkSession are evicted on first use of a new one (sweeps run one
@@ -99,7 +107,6 @@ def memo(spark, name: str, sf_dir: str, build):
         # aux handle belongs to the dataset (or session) just dropped
         _drain_memo_aux()
     df = build().persist()
-    df.count()
     _MEMO[key] = (spark, df)
     return df
 

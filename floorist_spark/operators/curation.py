@@ -1372,8 +1372,8 @@ def c17_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ntok = f"CAST(size({tf.tokens_spark(tf.norm_spark('text'))}) AS BIGINT)"
     # the per-source aggregate feeds FOUR consumers (enriched twice, the
-    # budget total, the boundary); persisted + materialized so the corpus
-    # scan+tokenize runs once (plan pin in test_plan_shapes_r6b)
+    # budget total, the boundary); persisted so one corpus scan+tokenize
+    # pass feeds all four (plan pin in test_plan_shapes_r6b)
     src = track(
         _docs(spark, sf_dir)
         .select("source", F.expr(ntok).alias("n"))
@@ -1381,7 +1381,6 @@ def c17_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("n").alias("cap"), F.count("*").alias("n_docs"))
         .persist()
     )
-    src.count()
     wr = Window.orderBy(F.expr("CAST(cap AS DOUBLE) / n_docs"), "source")
     enriched = (
         src.select(

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from floorist_spark.functions import textfrag as tf
 from floorist_spark.operators._canon import CANON_DOCS_D as _CDOCS
+from floorist_spark.operators._canon import canonical_docs
 from floorist_spark.operators._cache import local_checkpoint, memo, track
 from floorist_spark.session import load_table
 
@@ -94,8 +95,6 @@ def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, and the round-9 degenerate sweep showed every chain entry
     silently diverging from its oracle on re-ingested/duplicated ids.
     Exact-dup censuses (d01/d02/d15c) deliberately stay raw."""
-    from floorist_spark.operators._canon import canonical_docs
-
     return (
         canonical_docs(spark, sf_dir)
         .select("doc_id", F.expr(_NORM_S).alias("nrm"))
@@ -222,30 +221,13 @@ def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint to storage."""
 
     def build() -> DataFrame:
-        docs = canonical_docs_parallel(spark, sf_dir).select("doc_id", "text")
+        docs = canonical_docs(spark, sf_dir).select("doc_id", "text")
         return docs.mapInPandas(
             _shingle_minhash_batches,
             "doc_id bigint, sh array<bigint>, mh array<bigint>",
         )
 
     return memo(spark, "dedup_hashed_shingles", sf_dir, build)
-
-
-def canonical_docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical docs with at least session-parallelism partitions — an
-    opaque mapInPandas pass inherits its input partitioning, and the
-    memoized canonical table can come out of AQE with fewer partitions
-    than cores at test scale. Only rebalances when the input is UNDER
-    parallelism (tiny by definition); on a many-split cluster scan this
-    is a no-op, so the full corpus is never reshuffled just to feed the
-    Python pass."""
-    from floorist_spark.operators._canon import canonical_docs
-
-    docs = canonical_docs(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    return docs
 
 
 def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,8 +519,6 @@ def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside consumers as a range exchange + sort on EACH join side."""
 
     def build() -> DataFrame:
-        from floorist_spark.operators._canon import canonical_docs
-
         ex = (
             canonical_docs(spark, sf_dir)
             .select(
@@ -844,7 +824,6 @@ def d10_curation_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives. Composes d09's connected components with the text family's
     quality scoring; per-cluster argmax is a window row_number, so the
     only added shuffle is on cluster_id."""
-    from floorist_spark.operators._canon import canonical_docs
     from floorist_spark.operators.text import quality_score_expr
     from pyspark.sql.window import Window
 
@@ -1182,7 +1161,6 @@ def d14_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.md5("g").alias("h"))
         .persist()
     )
-    ng.count()
     sizes = ng.groupBy("doc_id").agg(F.count("*").alias("n_ngrams"))
     postings = (
         ng.groupBy("h")

@@ -885,7 +885,7 @@ def e14_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: e01-style map-side-combined hourly rollup → a 1-row
     moments aggregate over the (tiny) hours table → broadcast back over
     it. The hourly table feeds BOTH the moments and the scoring join, so
-    it is persisted and eagerly materialized — without that, Spark
+    it is persisted so one pass feeds both — without that, Spark
     replays the subtree and the corpus is scanned twice (caught by
     .explain: two FileScans of events in the unpersisted plan)."""
     ev = _load_events(spark, sf_dir)
@@ -896,7 +896,6 @@ def e14_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .persist()
     )
-    hourly.count()
     stats = hourly.agg(
         F.count("*").alias("n_hours"),
         F.sum("n_events").alias("s"),
@@ -1222,9 +1221,8 @@ def e19_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.col("session_id").alias("ss"), "event_type"
         )
         .distinct()
-        .persist()
+        .persist()  # one pass feeds the four consumers below
     )
-    st.count()  # materialize before the four consumers fork
     n_s = (
         st.select("user_id", "ss")
         .distinct()
@@ -2711,8 +2709,8 @@ def e35_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _load_events(spark, sf_dir)
     # date_trunc is monotone, so the calendar bounds are the min/max of
     # the ALREADY-ROLLED-UP hours — one corpus scan feeds everything.
-    # The rollup is persisted (tiny: one row per hour) because both the
-    # bounds and the scoring join read it; unpersisted, Spark replays
+    # The rollup is persisted (tiny: one row per hour) so one pass feeds
+    # both the bounds and the scoring join; unpersisted, Spark replays
     # the subtree and scans the corpus twice (the e14 lesson, pinned by
     # the FileScan-count plan test).
     agg = track(
@@ -2720,7 +2718,6 @@ def e35_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .persist()
     )
-    agg.count()
     bounds = agg.agg(
         F.min("hour").alias("lo"),
         F.max("hour").alias("hi"),

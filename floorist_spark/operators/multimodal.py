@@ -1399,7 +1399,6 @@ def m15_chunk_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    dd.count()
     owners = dd.groupBy("digest").agg(F.count("*").alias("n_owners"))
     usable = dd.join(
         owners.filter(F.col("n_owners") <= MAX_CHUNK_OWNERS), "digest"

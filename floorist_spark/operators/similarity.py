@@ -404,9 +404,8 @@ def s05_kmeans_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = track(
         _emb_canonical(spark, sf_dir)
         .select("vec_id", "embedding")
-        .persist()
+        .persist()  # scanned T_LLOYD+1 times; the first scan fills it
     )
-    emb.count()  # scanned T_LLOYD+1 times; cache once
 
     cents: list[tuple[int, list[float]]] = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
@@ -1257,13 +1256,11 @@ def s15_probe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    emb.count()
     truth = track(
         s01_cosine_topk_brute(spark, sf_dir)
         .select("query_id", "neighbor_id")
         .persist()
     )
-    truth.count()
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),

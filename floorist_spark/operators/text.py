@@ -668,9 +668,8 @@ def t12_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = track(
         canonical_docs(spark, sf_dir)
         .select("doc_id", F.expr(_TOK_S).alias("toks"))
-        .persist()
+        .persist()  # one scan feeds vocab + both bigram walks
     )
-    toks.count()  # one scan feeds vocab + both bigram walks
     bg = toks.select(
         "doc_id",
         F.posexplode(F.expr(tf.word_ngrams_spark("toks", 2))).alias("pos", "bg"),
@@ -1511,13 +1510,12 @@ def t21_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("tok") != "")
     )
     # the per-type counts feed THREE consumers (total, n_types, top-K);
-    # persisted + materialized so the token explode/shuffle runs once —
+    # persisted so one token explode/shuffle pass feeds all three —
     # unpersisted, Spark replays the subtree per consumer (three corpus
     # scans, caught by the plan pin in test_plan_shapes_r6b)
     counts = track(
         toks.groupBy("tok").agg(F.count("*").alias("cnt")).persist()
     )
-    counts.count()
     # totals derive from the per-type counts — ONE corpus scan feeds
     # everything downstream
     total = counts.agg(F.sum("cnt").alias("total_tokens"))

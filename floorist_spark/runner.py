@@ -93,9 +93,10 @@ class FlooristSpark:
 
 
 def _configure_loglevel() -> None:
-    """F14 (`floorist.py:295-297`)."""
+    """F14 (`floorist.py:295-297`); of py4j's records only warnings pass."""
     loglevel = environ.get("LOGLEVEL", "INFO").upper()
     logging.basicConfig(level=loglevel, format=LOG_FMT)
+    logging.getLogger("py4j").setLevel(logging.WARNING)
 
 
 def main() -> None:

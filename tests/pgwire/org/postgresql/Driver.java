@@ -19,8 +19,8 @@
 //     fetchSize-bounded batches, same shape as pgjdbc's cursor mode
 //   * text-format decoding for the types the reference schema uses:
 //     int2/4/8, float4/8, numeric, text/varchar/bpchar, bool, bytea, date,
-//     timestamp, timestamptz, uuid, json/jsonb, interval, inet (as their
-//     text form), and 1-D arrays
+//     time, timestamp, timestamptz, uuid, json/jsonb, interval, inet (as
+//     their text form), and 1-D arrays decoded by their element type
 //
 // The class is NAMED org.postgresql.Driver because that exact class name is
 // the reference deployment's hardcoded driver (reference floorist.py:123 —
@@ -65,6 +65,7 @@ import java.sql.Types;
 import java.time.Instant;
 import java.time.LocalDate;
 import java.time.LocalDateTime;
+import java.time.LocalTime;
 import java.time.ZoneId;
 import java.time.ZoneOffset;
 import java.util.ArrayDeque;
@@ -233,6 +234,62 @@ final class Col {
                 return true;
             default:
                 return false;
+        }
+    }
+
+    /** The element column of a 1-D array column (pg_type.typelem; an
+     *  array's typmod is its elements'); text for any other column. */
+    Col element() {
+        switch (oid) {
+            case 1000: return new Col(name, 16, typmod);
+            case 1001: return new Col(name, 17, typmod);
+            case 1005: return new Col(name, 21, typmod);
+            case 1007: return new Col(name, 23, typmod);
+            case 1014: return new Col(name, 1042, typmod);
+            case 1015: return new Col(name, 1043, typmod);
+            case 1016: return new Col(name, 20, typmod);
+            case 1021: return new Col(name, 700, typmod);
+            case 1022: return new Col(name, 701, typmod);
+            case 1115: return new Col(name, 1114, typmod);
+            case 1182: return new Col(name, 1082, typmod);
+            case 1231: return new Col(name, 1700, typmod);
+            default: return new Col(name, 25, typmod);
+        }
+    }
+
+    /** Class of the value pgjdbc's getObject returns for this type. */
+    Class<?> javaClass() {
+        switch (oid) {
+            case 16: return Boolean.class;
+            case 17: return byte[].class;
+            case 20: return Long.class;
+            case 21: return Short.class;
+            case 23: return Integer.class;
+            case 700: return Float.class;
+            case 701: return Double.class;
+            case 1082: return java.sql.Date.class;
+            case 1083: return java.sql.Time.class;
+            case 1114: case 1184: return Timestamp.class;
+            case 1700: return BigDecimal.class;
+            default: return String.class;
+        }
+    }
+
+    /** One text-form value decoded to {@link #javaClass()}. */
+    Object decode(String s) {
+        switch (oid) {
+            case 16: return s.equals("t") || s.equals("true");
+            case 17: return Decode.bytea(s);
+            case 20: return Long.parseLong(s);
+            case 21: return Short.parseShort(s);
+            case 23: return Integer.parseInt(s);
+            case 700: return Float.parseFloat(s);
+            case 701: return Double.parseDouble(s);
+            case 1082: return Decode.date(s);
+            case 1083: return Decode.time(s);
+            case 1114: case 1184: return Decode.timestamp(s);
+            case 1700: return new BigDecimal(s);
+            default: return s;
         }
     }
 }
@@ -674,6 +731,13 @@ final class Decode {
         return java.sql.Date.valueOf(LocalDate.parse(s));
     }
 
+    /** "HH:MM:SS[.ffffff]" on 1970-01-01 in the JVM zone, as pgjdbc
+     *  builds a java.sql.Time (millisecond precision). */
+    static java.sql.Time time(String s) {
+        LocalDateTime ldt = LocalTime.parse(s).atDate(LocalDate.of(1970, 1, 1));
+        return new java.sql.Time(ldt.atZone(ZoneId.systemDefault()).toInstant().toEpochMilli());
+    }
+
     static byte[] bytea(String s) {
         if (!s.startsWith("\\x")) {
             throw new IllegalArgumentException(
@@ -1018,6 +1082,10 @@ final class Handlers {
             String v = raw.apply(a, cols);
             return v == null ? null : Decode.date(v);
         });
+        t.put("getTime", a -> {
+            String v = raw.apply(a, cols);
+            return v == null ? null : Decode.time(v);
+        });
         t.put("getTimestamp", a -> {
             String v = raw.apply(a, cols);
             return v == null ? null : Decode.timestamp(v);
@@ -1039,13 +1107,19 @@ final class Handlers {
         throw new IllegalArgumentException("pgwire: no column " + label);
     }
 
-    private static Object sqlArray(Object[] values, Col arrayCol) {
+    /** A java.sql.Array whose getArray is typed by the element type, as
+     *  pgjdbc's is (int4[] -> Integer[], date[] -> java.sql.Date[]). */
+    private static Object sqlArray(Object[] texts, Col arrayCol) {
         java.util.Map<String, Call> t = table();
-        String elemName = arrayCol.typeName().startsWith("_")
-                ? arrayCol.typeName().substring(1) : "text";
+        Col elem = arrayCol.element();
+        Object[] values = (Object[]) java.lang.reflect.Array.newInstance(
+                elem.javaClass(), texts.length);
+        for (int i = 0; i < texts.length; i++) {
+            values[i] = texts[i] == null ? null : elem.decode((String) texts[i]);
+        }
         t.put("getArray", a -> values);
-        t.put("getBaseType", a -> Types.VARCHAR);
-        t.put("getBaseTypeName", a -> elemName);
+        t.put("getBaseType", a -> elem.jdbcType());
+        t.put("getBaseTypeName", a -> elem.typeName());
         t.put("free", a -> null);
         return proxy(java.sql.Array.class, t, false);
     }

@@ -129,3 +129,73 @@ def test_memo_evicts_on_dataset_switch(spark, tmp_path):
     assert dirs == {os.path.realpath(str(other))}
     release_caches()
     release_memos()
+
+
+#: entries whose builders persist an intermediate their plan reads more
+#: than once, plus the dedup memo chain's first two consumers
+_PERSISTING_ENTRIES = (
+    "c17_budget_waterfill",
+    "d03_minhash_lsh_candidates",
+    "d04_lsh_jaccard_dedup",
+    "d14_ngram_containment",
+    "e14_hourly_anomaly",
+    "e19_cooccurrence_lift",
+    "e35_seasonal_anomaly",
+    "m15_chunk_overlap_pairs",
+    "s05_kmeans_ivf_assign",
+    "s15_probe_frontier",
+    "t12_bigram_lm_score",
+    "t21_vocab_coverage",
+)
+
+
+def test_builds_run_no_action_to_fill_a_cache(spark, monkeypatch):
+    """persist() marks a DataFrame for reuse and the first query that reads
+    it fills it: neither a memo nor a builder counts a cache full, and no
+    builder probes a partition count through ``.rdd``."""
+    release_caches()
+    release_memos()  # every memo is built, not hit
+    cls = type(spark.range(1))
+
+    def refuse(*_):
+        raise AssertionError("an action ran to fill a cache")
+
+    monkeypatch.setattr(cls, "count", refuse)
+    monkeypatch.setattr(cls, "rdd", property(refuse))
+    qs = all_queries()
+    try:
+        for name in _PERSISTING_ENTRIES:
+            qs[name](spark, SF_SMOKE)
+    finally:
+        release_caches()
+        release_memos()
+
+
+def test_shingle_pass_runs_once_per_canonical_partition(spark, monkeypatch, tmp_path):
+    """d04's plan reads the shingle memo along three paths (bands, and both
+    sides of the Jaccard join); a cold run still makes one Python pass per
+    partition of the canonical-docs memo, because the first reader fills
+    the memo and the others read the cached copy."""
+    from floorist_spark.operators import dedup
+    from floorist_spark.operators._canon import canonical_docs
+
+    release_caches()
+    release_memos()
+    markers = str(tmp_path)
+    shingle = dedup._shingle_minhash_batches
+
+    def counted(batches):
+        import os
+        import uuid
+
+        open(os.path.join(markers, uuid.uuid4().hex), "w").close()
+        yield from shingle(batches)
+
+    monkeypatch.setattr(dedup, "_shingle_minhash_batches", counted)
+    try:
+        all_queries()["d04_lsh_jaccard_dedup"](spark, SF_SMOKE).collect()
+        n_parts = canonical_docs(spark, SF_SMOKE).rdd.getNumPartitions()
+        assert len(list(tmp_path.iterdir())) == n_parts
+    finally:
+        release_caches()
+        release_memos()

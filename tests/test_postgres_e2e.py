@@ -39,7 +39,7 @@ import shutil
 import socket
 import subprocess
 import time
-from datetime import date
+from datetime import date, datetime
 from functools import partial
 
 import pytest
@@ -196,16 +196,18 @@ def seeded(spark, pg_server):
     st.execute(
         "CREATE TABLE pg_people (id uuid, name text, tags text[], "
         "meta jsonb, amt numeric(12,4), created timestamptz, n bigint, "
-        "span interval, addr inet)"
+        "span interval, addr inet, ints int4[], at time)"
     )
     rows = [
         f"('{UUIDS[0]}', 'one',   ARRAY['a','b'], '{{\"k\": 1}}', 12.5000, "
         "TIMESTAMPTZ '2026-01-02 03:04:05+00', 9000000000, "
-        "INTERVAL '1 day 02:03:04', INET '10.1.2.3/8')",
+        "INTERVAL '1 day 02:03:04', INET '10.1.2.3/8', ARRAY[1, -2, NULL]::int4[], "
+        "TIME '13:14:15')",
         f"('{UUIDS[1]}', 'two',   ARRAY['c'],     '{{\"k\": 2}}', 0.2500, "
-        "TIMESTAMPTZ '2026-02-03 04:05:06+00', 1, INTERVAL '3 months', INET '::1')",
+        "TIMESTAMPTZ '2026-02-03 04:05:06+00', 1, INTERVAL '3 months', INET '::1', "
+        "ARRAY[2147483647]::int4[], TIME '00:00:00')",
         f"('{UUIDS[2]}', 'three', ARRAY[]::text[], NULL,          99.9900, "
-        "TIMESTAMPTZ '2026-03-04 05:06:07+00', -7, NULL, NULL)",
+        "TIMESTAMPTZ '2026-03-04 05:06:07+00', -7, NULL, NULL, '{}'::int4[], NULL)",
     ]
     for r in rows:
         st.execute(f"INSERT INTO pg_people VALUES {r}")
@@ -229,9 +231,10 @@ def test_uuid_oid_2950_maps_to_string(spark, pg_server, seeded):
 
 
 def test_pg_exotic_types_survive_the_dump_path(spark, pg_server, seeded, tmp_path):
-    # text[] / jsonb / numeric / timestamptz / interval / inet through
-    # read -> partitioned parquet sink, then read back exact; the dialect
-    # maps every Types.OTHER column (jsonb, interval, inet) to string.
+    # text[] / int4[] / jsonb / numeric / timestamptz / time / interval /
+    # inet through read -> partitioned parquet sink, then read back exact;
+    # the dialect maps every Types.OTHER column (jsonb, interval, inet) to
+    # string.
     storage = StorageClient(spark, f"file://{tmp_path}")
     runner = partial(read_query, spark, pg_config(pg_server))
     ex = DumpExecutor(storage, runner, run_date=RUN_DATE)
@@ -260,6 +263,16 @@ def test_pg_exotic_types_survive_the_dump_path(spark, pg_server, seeded, tmp_pat
     assert rows["one"]["addr"] == "10.1.2.3/8"
     assert rows["two"]["addr"] == "::1"
     assert rows["three"]["span"] is None and rows["three"]["addr"] is None
+    # int4[] elements arrive as ints (the driver types an array by its
+    # element), and a time column as that time of day on 1970-01-01
+    assert types["ints"] == "array<int>"
+    assert rows["one"]["ints"] == [1, -2, None]
+    assert rows["two"]["ints"] == [2147483647]
+    assert rows["three"]["ints"] == []
+    assert types["at"] == "timestamp"
+    assert rows["one"]["at"] == datetime(1970, 1, 1, 13, 14, 15)
+    assert rows["two"]["at"] == datetime(1970, 1, 1)
+    assert rows["three"]["at"] is None
 
 
 def test_numeric_type_zoo_bit_exact(spark, pg_server, pg_driver):

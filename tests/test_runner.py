@@ -279,15 +279,29 @@ def test_cron_jvm_profile_reaches_jvm_before_deployment_options(cron_run):
     assert seen["serial_gc"] == "true"
 
 
+#: one record of the run's own log (``runner.LOG_FMT``)
+_RECORD = re.compile(r"\[\d{4}-\d\d-\d\d \d\d:\d\d:\d\d,\d{3}\] \[[A-Z]+\] ")
+
+
+def _records(stderr: str) -> list[str]:
+    return [line for line in stderr.split("\n") if _RECORD.search(line)]
+
+
 def test_cron_run_log_has_no_progress_bar(cron_run):
     _, stderr = cron_run
     assert "[Stage" not in stderr, stderr[-2000:]
     # every record of the run's own log starts its own line with "["
-    record = re.compile(r"\[\d{4}-\d\d-\d\d \d\d:\d\d:\d\d,\d{3}\] \[[A-Z]+\] ")
-    lines = stderr.split("\n")
-    records = [line for line in lines if record.search(line)]
-    assert records and all(record.match(line) for line in records), records
+    records = _records(stderr)
+    assert records and all(_RECORD.match(line) for line in records), records
     assert any(line.endswith("Dumped 1 from total of 1") for line in records), records
+
+
+def test_cron_run_log_ends_with_the_run_summary(cron_run):
+    # py4j's own INFO records (its connection bookkeeping at interpreter
+    # exit) stay out of the run's log, so the summary is the last record
+    records = _records(cron_run[1])
+    assert records[-1].endswith("Dumped 1 from total of 1"), records
+    assert not any("clientserver" in line for line in records), records
 
 
 def test_session_sizes_itself_from_the_jvm(tmp_path):

@@ -12,7 +12,6 @@ short, unicode, control whitespace).
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from floorist_spark.operators._cache import release_memos
@@ -70,7 +69,6 @@ def test_shingle_pass_parity_sf001(spark):
     _assert_parity(spark, SF_CORRECTNESS)
 
 
-@pytest.mark.slow
 def test_shingle_pass_parity_sf01(spark):
     """Full-corpus pin at the bench scale (VERDICT r11 item 2: the pin
     must hold at sf0.01 AND sf0.1 before the switch ships)."""
