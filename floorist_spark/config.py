@@ -16,10 +16,11 @@ Spark-specific additions (not in the reference):
 * ``FLOORIST_OUTPUT_URI`` — write target override for native mode
   (``file:///...`` for local runs, any Hadoop-FS URI on a cluster). When
   unset the target is ``s3a://<AWS_BUCKET>`` as in the reference.
-* ``FLOORIST_MODE`` — ``"native"`` (the default: queries run on Catalyst
-  over the views of ``FLOORIST_DATA_DIR``, one per ``<name>.parquet``) or
-  ``"jdbc"`` (queries pushed to live PostgreSQL for reference parity,
-  which alone requires the database settings);
+* ``FLOORIST_DATA_DIR`` — a table directory: when set, the run is
+  ``"native"`` (queries run on Catalyst over its views, one per
+  ``<name>.parquet``); when unset it is ``"jdbc"``, the reference's own
+  contract (queries pushed to live PostgreSQL, which alone requires the
+  database settings);
 * ``FLOORIST_RUN_DATE`` — ``YYYY-MM-DD`` pins the partition date for
   reproducible backfills (the reference always stamps "today").
 * :func:`s3a_conf` — maps resolved credentials onto the Hadoop S3A keys the
@@ -62,13 +63,12 @@ class Config:
     output_uri: str | None = None
     mode: str = "native"
     #: Full JDBC URL override (``FLOORIST_JDBC_URL``). When set it replaces
-    #: the postgres URL built from POSTGRES_* vars, enabling any JDBC-capable
-    #: database (the e2e tests use Spark's bundled embedded Derby). The
-    #: reference is postgres-only (`floorist.py:123`), so the default path —
-    #: override unset — keeps exact reference behavior.
+    #: the postgres URL built from POSTGRES_* vars, enabling any database
+    #: whose JDBC 4 driver is on the driver classpath: ``DriverManager``
+    #: picks the driver by the URL (the e2e tests use Spark's bundled
+    #: embedded Derby). The reference is postgres-only (`floorist.py:123`),
+    #: so the default path — override unset — keeps exact reference behavior.
     jdbc_url: str | None = None
-    #: Driver class for the override URL (``FLOORIST_JDBC_DRIVER``).
-    jdbc_driver: str | None = None
     #: Native-mode table directory (``FLOORIST_DATA_DIR``).
     data_dir: str | None = None
     #: Partition date of every dump (``FLOORIST_RUN_DATE``); None is today.
@@ -78,15 +78,16 @@ class Config:
 def get_config(mode: str | None = None) -> Config:
     """Resolve + validate config from the environment.
 
-    ``mode`` overrides ``FLOORIST_MODE``. ``"jdbc"`` reproduces the
-    reference contract exactly (database required). ``"native"`` drops the
-    database requirement — Catalyst owns the query surface.
+    The mode is ``"native"`` when ``FLOORIST_DATA_DIR`` is set — Catalyst
+    owns the query surface and no database is required — and ``"jdbc"``
+    otherwise, which reproduces the reference contract exactly (database
+    required). ``mode`` overrides that choice.
     """
     config = Config()
-    config.mode = environ.get("FLOORIST_MODE", config.mode) if mode is None else mode
     _set_bucket_config(config)
     _set_database_config(config)
     _set_floorist_config(config)
+    config.mode = mode or ("native" if config.data_dir else "jdbc")
     _validate_config(config)
     return config
 
@@ -123,7 +124,6 @@ def _set_database_config(config: Config) -> None:
         config.database_username = environ.get("POSTGRESQL_USER")
         config.database_password = environ.get("POSTGRESQL_PASSWORD")
     config.jdbc_url = environ.get("FLOORIST_JDBC_URL")
-    config.jdbc_driver = environ.get("FLOORIST_JDBC_DRIVER")
 
 
 def _set_floorist_config(config: Config) -> None:
@@ -157,9 +157,6 @@ def _validate_config(config: Config) -> None:
 
     if not config.bucket_name and not config.output_uri:
         raise ValueError("Bucket name not configured, set AWS_BUCKET variable.")
-
-    if config.mode not in ("native", "jdbc"):
-        raise ValueError(f"FLOORIST_MODE must be one of native, jdbc, got {config.mode!r}")
 
     if config.data_dir and not isdir(config.data_dir):
         raise ValueError(f"FLOORIST_DATA_DIR {config.data_dir!r} is not a directory")

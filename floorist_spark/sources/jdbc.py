@@ -6,13 +6,19 @@ cursor pages the opaque SQL string into bounded-memory chunks. The Spark
 equivalent is the built-in JDBC source with the ``query`` option; memory is
 bounded by ``DEFAULT_FETCHSIZE`` rows per round-trip instead of pandas chunks.
 
-F9 (one database snapshot per dump): every read pins ``numPartitions=1``,
+F9 (one database snapshot per dump): a ``query`` read is one partition,
 so a dump's whole result comes over ONE connection and therefore from one
 snapshot, matching the reference's per-dump transaction
-(`floorist.py:128,148-152`). The sink executes the read once per attempt
-(``StorageClient.write_parquet`` persists it for the count and the write),
-so a dump sees exactly that snapshot. Spark JDBC reads auto-commit, so
-there is no transaction to commit or roll back around the dump.
+(`floorist.py:128,148-152`); Spark has no way to split it (it rejects
+``partitionColumn`` together with ``query``). The sink executes the read
+once per attempt (``StorageClient.write_parquet`` persists it for the
+count and the write), so a dump sees exactly that snapshot. Spark JDBC
+reads auto-commit, so there is no transaction to commit or roll back
+around the dump.
+
+The driver is the one ``DriverManager`` finds for the URL: pgjdbc for the
+reference's ``jdbc:postgresql:`` URL, any other JDBC 4 driver on the driver
+classpath for a ``FLOORIST_JDBC_URL`` override.
 
 F3 (uuid→string): the reference registers a psycopg2 caster for OID 2950
 (`floorist.py:27-29,117-139`) so its writer never fails on a source type.
@@ -33,11 +39,6 @@ from floorist_spark.config import Config
 #: at the floorplan chunksize default (`floorist.py:194`), so match it.
 DEFAULT_FETCHSIZE = 1000
 
-#: Reference database driver (`floorist.py:123` — postgres-only). An
-#: explicit ``config.jdbc_url``/``jdbc_driver`` overrides both, which is how
-#: the e2e suite runs the identical read path on embedded Derby.
-DEFAULT_DRIVER = "org.postgresql.Driver"
-
 
 def jdbc_url(config: Config) -> str:
     if config.jdbc_url:
@@ -54,8 +55,6 @@ def build_jdbc_options(config: Config, query: str) -> dict[str, str]:
         "user": config.database_username or "",
         "password": config.database_password or "",
         "fetchsize": str(DEFAULT_FETCHSIZE),
-        "driver": config.jdbc_driver or DEFAULT_DRIVER,
-        "numPartitions": "1",
     }
 
 

@@ -22,11 +22,12 @@
 //     time, timestamp, timestamptz, uuid, json/jsonb, interval, inet (as
 //     their text form), and 1-D arrays decoded by their element type
 //
-// The class is NAMED org.postgresql.Driver because that exact class name is
-// the reference deployment's hardcoded driver (reference floorist.py:123 —
-// postgres-only) and therefore this engine's F2 default
-// (floorist_spark/sources/jdbc.py DEFAULT_DRIVER): the point of the e2e is
-// to exercise the DEFAULT wiring with zero test-path special-casing. It
+// The class is NAMED org.postgresql.Driver, the reference deployment's
+// driver (reference floorist.py:123 — postgres-only), and the jar lists it
+// in META-INF/services/java.sql.Driver as pgjdbc does (tests/pgwire_build.py),
+// so DriverManager picks it for the engine's jdbc:postgresql: URL: the point
+// of the e2e is to exercise the DEFAULT wiring with zero test-path
+// special-casing. It
 // advertises itself as non-jdbcCompliant and version 0.x so it cannot be
 // mistaken for the real driver at runtime. JDBC type metadata
 // (ResultSetMetaData codes/names, e.g. uuid -> Types.OTHER "uuid",

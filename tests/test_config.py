@@ -3,11 +3,16 @@ pinned by `tests/test_floorist.py:45-105`)."""
 
 from __future__ import annotations
 
+import os
 from datetime import date
 
 import pytest
+import yaml
 
 from floorist_spark.config import base_output_uri, get_config, s3a_conf
+from floorist_spark.sources.jdbc import build_jdbc_options
+
+CRONJOB = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "deployment", "cronjob.yaml")
 
 FULL_ENV = {
     "AWS_BUCKET": "bucket",
@@ -30,9 +35,7 @@ def env(monkeypatch, tmp_path):
         monkeypatch.setenv(k, v)
     monkeypatch.setenv("FLOORPLAN_FILE", str(plan))
     monkeypatch.delenv("FLOORIST_OUTPUT_URI", raising=False)
-    monkeypatch.delenv("FLOORIST_JDBC_URL", raising=False)
-    monkeypatch.delenv("FLOORIST_JDBC_DRIVER", raising=False)
-    for var in ("FLOORIST_MODE", "FLOORIST_DATA_DIR", "FLOORIST_RUN_DATE"):
+    for var in ("FLOORIST_JDBC_URL", "FLOORIST_DATA_DIR", "FLOORIST_RUN_DATE"):
         monkeypatch.delenv(var, raising=False)
     return monkeypatch
 
@@ -87,10 +90,8 @@ def test_jdbc_url_override_skips_postgres_requirements(env):
                 "POSTGRESQL_PASSWORD", "AWS_ENDPOINT"):
         env.delenv(var)
     env.setenv("FLOORIST_JDBC_URL", "jdbc:derby:memory:db")
-    env.setenv("FLOORIST_JDBC_DRIVER", "org.apache.derby.jdbc.EmbeddedDriver")
     cfg = get_config(mode="jdbc")
     assert cfg.jdbc_url == "jdbc:derby:memory:db"
-    assert cfg.jdbc_driver == "org.apache.derby.jdbc.EmbeddedDriver"
 
 
 def test_native_mode_does_not_require_database(env):
@@ -101,17 +102,32 @@ def test_native_mode_does_not_require_database(env):
     assert cfg.mode == "native"
 
 
-def test_mode_defaults_to_native(env):
-    assert get_config().mode == "native"
-    env.setenv("FLOORIST_MODE", "jdbc")
+def test_mode_follows_data_dir(env, tmp_path):
+    # no table directory: the reference's contract, queries run on the database
     assert get_config().mode == "jdbc"
-    assert get_config(mode="native").mode == "native"  # the argument wins
+    env.setenv("FLOORIST_DATA_DIR", str(tmp_path))
+    assert get_config().mode == "native"
+    assert get_config(mode="jdbc").mode == "jdbc"  # the argument wins
 
 
-def test_unknown_mode_raises(env):
-    env.setenv("FLOORIST_MODE", "postgres")
-    with pytest.raises(ValueError, match="FLOORIST_MODE must be one of native, jdbc, got 'postgres'"):
-        get_config()
+def test_shipped_cronjob_env_selects_jdbc(monkeypatch, tmp_path):
+    # the deployment's own env shape, with a dummy value for every secret,
+    # must run the floorplan on the PostgreSQL it names
+    with open(CRONJOB) as fh:
+        job = yaml.safe_load(fh)
+    (container,) = job["spec"]["jobTemplate"]["spec"]["template"]["spec"]["containers"]
+    names = [var["name"] for var in container["env"]]
+    for var in list(os.environ):
+        if var.startswith(("FLOORIST_", "AWS_", "POSTGRES")):
+            monkeypatch.delenv(var)
+    for name in names:
+        monkeypatch.setenv(name, name.lower().replace("_", "-"))
+    plan = tmp_path / "floorplan.yaml"
+    plan.write_text("- prefix: p\n  query: SELECT 1\n")
+    monkeypatch.setenv("FLOORPLAN_FILE", str(plan))
+    cfg = get_config()
+    assert cfg.mode == "jdbc"
+    assert build_jdbc_options(cfg, "SELECT 1")["url"] == "jdbc:postgresql://postgres-service-host/postgresql-database"
 
 
 def test_run_date_and_data_dir_resolve(env, tmp_path):

@@ -37,7 +37,6 @@ from floorist_spark.sources.jdbc import build_jdbc_options, read_query
 from floorist_spark.storage import StorageClient
 
 DERBY_URL = "jdbc:derby:memory:floorist_e2e"
-DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 RUN_DATE = date(2026, 3, 4)
 DAY_PATH = "year_created=2026/month_created=3/day_created=4"
@@ -47,7 +46,6 @@ def derby_config() -> Config:
     return Config(
         mode="jdbc",
         jdbc_url=DERBY_URL,
-        jdbc_driver=DERBY_DRIVER,
         # Derby's default schema is the user name; APP is the no-auth default
         database_username="APP",
         database_password="",
@@ -58,9 +56,9 @@ def derby_config() -> Config:
 def derby(spark):
     """Create the in-memory Derby DB and a typed table through a real JDBC
     connection (py4j → java.sql.DriverManager in the driver JVM; local-mode
-    executors share that JVM, so Spark's JDBC reads resolve the same DB)."""
+    executors share that JVM, so Spark's JDBC reads resolve the same DB).
+    DriverManager finds Derby's driver by the URL, as Spark's reads do."""
     jvm = spark._jvm
-    jvm.java.lang.Class.forName(DERBY_DRIVER)
     conn = jvm.java.sql.DriverManager.getConnection(DERBY_URL + ";create=true")
     st = conn.createStatement()
     st.execute(
@@ -82,14 +80,14 @@ def derby(spark):
 def test_build_options_use_override_url_and_driver():
     opts = build_jdbc_options(derby_config(), "SELECT 1")
     assert opts["url"] == DERBY_URL
-    assert opts["driver"] == DERBY_DRIVER
     assert opts["fetchsize"] == "1000"
-    assert opts["numPartitions"] == "1"
 
 
 def test_read_query_executes_on_live_jdbc(spark, derby):
     # F2: the opaque SQL string runs verbatim on the database.
     df = read_query(spark, derby_config(), "SELECT * FROM invoices")
+    # F9: the read is one partition, so one connection and one snapshot
+    assert df.rdd.getNumPartitions() == 1
     got = {r["ID"]: r for r in df.collect()}
     assert set(got) == {1, 2, 3}
     assert got[1]["NAME"] == "alpha"
@@ -230,11 +228,11 @@ def test_runner_jdbc_mode_end_to_end_via_env(spark, derby, tmp_path, monkeypatch
     monkeypatch.setenv("FLOORPLAN_FILE", str(plan))
     monkeypatch.setenv("FLOORIST_OUTPUT_URI", f"file://{out}")
     monkeypatch.setenv("FLOORIST_JDBC_URL", DERBY_URL)
-    monkeypatch.setenv("FLOORIST_JDBC_DRIVER", DERBY_DRIVER)
     monkeypatch.setenv("POSTGRESQL_USER", "APP")
     monkeypatch.setenv("FLOORIST_RUN_DATE", RUN_DATE.isoformat())
+    monkeypatch.delenv("FLOORIST_DATA_DIR", raising=False)
 
-    cfg = get_config(mode="jdbc")
+    cfg = get_config()  # no data dir: jdbc
     FlooristSpark(cfg, spark=spark).run()  # exit(1) would raise SystemExit
 
     target = out / "exports/inv" / DAY_PATH

@@ -336,7 +336,7 @@ def test_numeric_type_zoo_bit_exact(spark, pg_server, pg_driver):
 def test_fetchsize_pages_server_side(spark, pg_server, pg_driver):
     # F2: fetchsize bounds rows per wire round-trip; 5000 rows at the
     # default 1000 take 5 fetches through one connection
-    # (numPartitions=1 parity — one snapshot, reference F9).
+    # (a query read is one partition — one snapshot, reference F9).
     df = read_query(
         spark,
         pg_config(pg_server),
@@ -376,10 +376,10 @@ def test_runner_env_end_to_end_via_postgres_service_host(
     monkeypatch.setenv("POSTGRESQL_USER", pg_server["user"])
     monkeypatch.setenv("POSTGRESQL_PASSWORD", pg_server["password"])
     monkeypatch.delenv("FLOORIST_JDBC_URL", raising=False)
-    monkeypatch.delenv("FLOORIST_JDBC_DRIVER", raising=False)
+    monkeypatch.delenv("FLOORIST_DATA_DIR", raising=False)
     monkeypatch.setenv("FLOORIST_RUN_DATE", RUN_DATE.isoformat())
 
-    cfg = get_config(mode="jdbc")
+    cfg = get_config()  # the env alone selects jdbc: no data dir
     assert jdbc_url(cfg) == f"jdbc:postgresql://{pg_server['host']}/{pg_server['db']}"
     with pytest.raises(SystemExit) as ex:
         FlooristSpark(cfg, spark=spark).run()

@@ -233,12 +233,15 @@ def cron_run(tmp_path_factory):
     launch arguments and profile printed between start-up and the run.
     The deployment's ``spark-defaults.conf`` adds its own JVM option. The
     dump sleeps 1.5 s in its task, longer than the 0.5 s after which
-    Spark's console progress bar would draw a stage."""
+    Spark's console progress bar would draw a stage. The dump's SQL is
+    constant, so an empty data dir makes it a native run with no
+    database."""
     tmp = tmp_path_factory.mktemp("cron")
     conf_dir = tmp / "conf"
     conf_dir.mkdir()
     (conf_dir / "spark-defaults.conf").write_text("spark.driver.extraJavaOptions -Dfloorist.probe=1\n")
     (tmp / "out").mkdir()
+    (tmp / "data").mkdir()
     (tmp / "floorplan.yaml").write_text(
         "- prefix: exports/slow\n  query: SELECT reflect('java.lang.Thread', 'sleep', 1500L) AS slept\n"
     )
@@ -264,6 +267,7 @@ def cron_run(tmp_path_factory):
     env = {
         "SPARK_CONF_DIR": str(conf_dir),
         "FLOORIST_OUTPUT_URI": f"file://{tmp / 'out'}",
+        "FLOORIST_DATA_DIR": str(tmp / "data"),
         "FLOORPLAN_FILE": str(tmp / "floorplan.yaml"),
     }
     stdout, stderr = _fresh_python(probe, tmp, env)

@@ -66,8 +66,12 @@ def test_session_windows_exact_under_hot_user(spark, skew_dir):
 @pytest.fixture
 def aqe_skew_conf(spark):
     """Lower AQE skew thresholds to test scale and force SMJ (no broadcast),
-    restoring the session conf afterwards."""
+    restoring the session conf afterwards. The shuffle partition count is
+    pinned too: the session's follows the CPU count, and at 4 partitions
+    the hot key's partition (~80k rows) is exactly 2x the median (~40k),
+    so ``skewedPartitionFactor`` never flags it; at 16 it is far above."""
     keys = {
+        "spark.sql.shuffle.partitions": "16",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
