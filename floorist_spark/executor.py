@@ -106,20 +106,38 @@ def load_floorplan(path: str) -> list[dict[str, Any]]:
         return parse_floorplan(fh)
 
 
-def is_retryable(ex: Exception) -> bool:
-    """F8: the first SQLSTATE on a ``java.sql.SQLException`` in the Java
-    cause chain decides; without one, the message patterns do."""
+def _sql_cause(ex: Exception):
+    """The first ``java.sql.SQLException`` with a SQLSTATE in ``ex``'s Java
+    cause chain, or None."""
     link = getattr(ex, "java_exception", None)
     for _ in range(8):
         if link is None:
             break
         # a py4j JavaObject answers hasattr for any name: test the class
-        if is_instance_of(SparkContext._gateway, link, "java.sql.SQLException"):
-            state = link.getSQLState()
-            if state:
-                return state in RETRYABLE_SQLSTATES
+        if is_instance_of(SparkContext._gateway, link, "java.sql.SQLException") and link.getSQLState():
+            return link
         link = link.getCause()
+    return None
+
+
+def is_retryable(ex: Exception) -> bool:
+    """F8: the first SQLSTATE on a ``java.sql.SQLException`` in the Java
+    cause chain decides; without one, the message patterns do."""
+    cause = _sql_cause(ex)
+    if cause is not None:
+        return cause.getSQLState() in RETRYABLE_SQLSTATES
     return any(p in str(ex) for p in RETRYABLE_ERROR_PATTERNS)
+
+
+def describe(ex: Exception) -> str:
+    """One line naming the driver's error: the class, message and SQLSTATE
+    of the link ``is_retryable`` reads, else the first line of ``ex``."""
+    cause = _sql_cause(ex)
+    if cause is None:
+        return str(ex).split("\n")[0]
+    # pgjdbc appends "Detail:" and "Hint:" lines to the server's message
+    message = str(cause.getMessage()).split("\n")[0]
+    return f"{cause.getClass().getName()}: {message} (SQLSTATE {cause.getSQLState()})"
 
 
 class DumpExecutor:
@@ -202,7 +220,7 @@ class DumpExecutor:
                     "[Dump #%d] Retrying in %d seconds due to: %s",
                     dump_count,
                     backoff,
-                    str(ex).split("\n")[0],
+                    describe(ex),
                 )
                 self.sleep(backoff)
 

@@ -114,6 +114,16 @@ def pytest_collection_modifyitems(config, items):
                 item.add_marker(skip_oracle)
 
 
+@pytest.fixture(scope="session", autouse=True)
+def private_cache(tmp_path_factory):
+    """The user's cache is never written: ``XDG_CACHE_HOME``, where a cron
+    run keeps its class-data archive (``runner.ClassArchive``), is a session
+    tmp dir, also for the fresh interpreters the runner tests start."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("XDG_CACHE_HOME", str(tmp_path_factory.mktemp("xdg_cache")))
+        yield
+
+
 @pytest.fixture(scope="session")
 def spark():
     from floorist_spark.session import get_spark

@@ -3,6 +3,7 @@ standalone suite, `/root/reference/tests/test_floorist_standalone.py:13-267`).""
 
 from __future__ import annotations
 
+import logging
 from datetime import date
 
 import pytest
@@ -129,6 +130,24 @@ def test_sqlstate_in_java_cause_chain_decides(spark, state, message, retry):
         java_exception = jvm.org.apache.spark.SparkException("Job aborted", cause)
 
     assert is_retryable(Py4JLike(message)) is retry
+
+
+def test_retry_warning_is_one_line_of_a_multiline_driver_message(spark, caplog):
+    # pgjdbc puts the server's Detail and Hint on lines of their own; the
+    # cron log keeps one record per line
+    message = "ERROR: could not serialize access\n  Hint: The transaction might succeed if retried."
+    cause = spark._jvm.java.sql.SQLException(message, "40001")
+
+    class Py4JLike(Exception):
+        java_exception = spark._jvm.org.apache.spark.SparkException("Job aborted", cause)
+
+    runner = FlakyRunner([Py4JLike("An error occurred while calling o69.load.")])
+    caplog.set_level(logging.WARNING)
+    assert make_executor(FakeStorage(), runner, []).execute(ROW, 1) is True
+    assert [r.getMessage() for r in caplog.records if "Retrying in" in r.getMessage()] == [
+        "[Dump #1] Retrying in 5 seconds due to: "
+        "java.sql.SQLException: ERROR: could not serialize access (SQLSTATE 40001)"
+    ]
 
 
 # -- DumpExecutor (F10) ----------------------------------------------------------

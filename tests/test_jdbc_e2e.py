@@ -24,6 +24,7 @@ final parquet contents are exact (mirrors
 
 from __future__ import annotations
 
+import logging
 import os
 from datetime import date
 from functools import partial
@@ -239,3 +240,22 @@ def test_runner_jdbc_mode_end_to_end_via_env(spark, derby, tmp_path, monkeypatch
     back = spark.read.parquet(f"file://{target}")
     assert back.count() == 3
     assert set(back.columns) == {"ID", "NAME"}
+
+
+def test_retry_warning_names_the_driver_error(spark, tmp_path, caplog, monkeypatch):
+    # a Derby URL naming a database that does not exist (no create=true)
+    # fails the read at load() with SQLSTATE XJ004; counted retryable here,
+    # so the retry warnings show, they name the driver's exception, not
+    # py4j's "An error occurred while calling oNN.load."
+    from floorist_spark import executor
+
+    monkeypatch.setattr(executor, "RETRYABLE_SQLSTATES", ("XJ004",))
+    cfg = Config(mode="jdbc", jdbc_url="jdbc:derby:memory:floorist_missing", database_username="APP")
+    storage = StorageClient(spark, f"file://{tmp_path}")
+    ex = DumpExecutor(storage, partial(read_query, spark, cfg), run_date=RUN_DATE, sleep=lambda s: None)
+    caplog.set_level(logging.INFO)
+    assert ex.execute({"prefix": "missing", "query": "SELECT 1 FROM SYSIBM.SYSDUMMY1"}, 1) is False
+    cause = "java.sql.SQLException: Database 'memory:floorist_missing' not found. (SQLSTATE XJ004)"
+    assert [r.getMessage() for r in caplog.records if "Retrying in" in r.getMessage()] == [
+        f"[Dump #1] Retrying in {backoff} seconds due to: {cause}" for backoff in (5, 10)
+    ]

@@ -201,22 +201,31 @@ def test_native_views_come_from_the_data_dir(runner_factory, spark, tmp_path):
         assert sorted(tuple(r) for r in rows) == sorted(zip(*columns.values()))
 
 
-def _fresh_python(code: str, cwd, env: dict[str, str]) -> tuple[str, str]:
+def _fresh_python(code: str, cwd, env: dict[str, str], submit: bool = False) -> tuple[str, str]:
     """Run ``code`` in a new interpreter and return its (stdout, stderr).
 
     The test session's JVM already exists, so a JVM that ``get_spark`` or
     ``FlooristSpark`` launches can only be seen from a fresh process. The
     child starts without the suite's ``FLOORIST_*``, ``SPARK_MASTER`` and
-    ``SPARK_GRAFT_CPUS``, with ``env`` on top. Output is decoded without
-    newline translation, so a bare carriage return stays visible."""
+    ``SPARK_GRAFT_CPUS``, with ``env`` on top. With ``submit``, Spark's
+    ``spark-submit`` launches the JVM first and then runs ``code`` as its
+    Python driver. Output is decoded without newline translation, so a bare
+    carriage return stays visible."""
     base = {
         k: v
         for k, v in os.environ.items()
         if not k.startswith("FLOORIST_") and k not in ("SPARK_MASTER", "SPARK_GRAFT_CPUS", "PYTHONPATH")
     }
     base.update(PYTHONPATH=REPO, SPARK_GRAFT_WAREHOUSE=str(cwd / "warehouse"))
+    argv = [sys.executable, "-c", textwrap.dedent(code)]
+    if submit:
+        from pyspark.find_spark_home import _find_spark_home
+
+        (cwd / "probe.py").write_text(textwrap.dedent(code))
+        argv = [os.path.join(_find_spark_home(), "bin", "spark-submit"), "--master", "local[1]", "probe.py"]
+        base["PYSPARK_PYTHON"] = sys.executable
     proc = subprocess.run(
-        [sys.executable, "-c", textwrap.dedent(code)],
+        argv,
         env={**base, **env},
         cwd=cwd,
         capture_output=True,
@@ -266,12 +275,15 @@ def cron_run(tmp_path_factory):
         """
     env = {
         "SPARK_CONF_DIR": str(conf_dir),
+        "XDG_CACHE_HOME": str(tmp / "cache"),
         "FLOORIST_OUTPUT_URI": f"file://{tmp / 'out'}",
         "FLOORIST_DATA_DIR": str(tmp / "data"),
         "FLOORPLAN_FILE": str(tmp / "floorplan.yaml"),
     }
     stdout, stderr = _fresh_python(probe, tmp, env)
-    return json.loads(stdout.strip().splitlines()[-1]), stderr
+    seen = json.loads(stdout.strip().splitlines()[-1])
+    seen["cache"] = [str(p.relative_to(tmp)) for p in (tmp / "cache").rglob("*")]
+    return seen, stderr
 
 
 def test_cron_jvm_profile_reaches_jvm_before_deployment_options(cron_run):
@@ -281,6 +293,14 @@ def test_cron_jvm_profile_reaches_jvm_before_deployment_options(cron_run):
     assert args.index("-XX:TieredStopAtLevel=1") < args.index("-Dfloorist.probe=1")
     assert seen["tier"] == "1"
     assert seen["serial_gc"] == "true"
+
+
+def test_deployment_conf_dir_launches_without_class_archive(cron_run):
+    # a conf dir with a spark-defaults.conf stays on the classpath, where
+    # JDK 17 shares no class: no archive option, and nothing is cached
+    seen, _ = cron_run
+    assert _cds_args(seen) == [], seen["args"]
+    assert seen["cache"] == []
 
 
 #: one record of the run's own log (``runner.LOG_FMT``)
@@ -337,3 +357,207 @@ def test_session_sizes_itself_from_the_jvm(tmp_path):
     stdout, _ = _fresh_python(probe, tmp_path, {})
     seen = json.loads(stdout.strip().splitlines()[-1])
     assert seen == {"jvm": [1, "1"], "env": [2, "2"], "extra_conf": [2, "7"]}
+
+
+#: A cron run that prints its JVM's launch arguments and the archives that
+#: JVM maps, then runs the floorplan and prints its exit code.
+ARCHIVE_PROBE = """
+    import json
+    from floorist_spark.config import get_config
+    from floorist_spark.runner import FlooristSpark, _configure_loglevel
+
+    _configure_loglevel()
+    engine = FlooristSpark(get_config())
+    jvm = engine.spark._jvm
+    with open(f"/proc/{jvm.java.lang.ProcessHandle.current().pid()}/maps") as fh:
+        seen = {"mapped": sorted({line.split()[-1] for line in fh if line.rstrip().endswith(".jsa")})}
+    seen["args"] = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    try:
+        engine.run()
+        seen["code"] = 0
+    except SystemExit as ex:
+        seen["code"] = ex.code
+    print(json.dumps(seen))
+    """
+
+ARCHIVE_PLAN = """
+- prefix: exports/series
+  query: SELECT id, id * 3 AS tripled FROM range(0, 2500)
+- prefix: exports/bad
+  query: SELECT FROM nonsense syntax(
+"""
+
+
+def _archive_run(tmp, cache, out: str) -> tuple[dict, str]:
+    """One cron run of ``ARCHIVE_PLAN`` with ``cache`` as ``XDG_CACHE_HOME``,
+    a conf dir that holds only a template, and ``out`` as its output."""
+    conf_dir = tmp / "conf"
+    conf_dir.mkdir(exist_ok=True)
+    (conf_dir / "spark-defaults.conf.template").write_text("# spark.master  local[2]\n")
+    (tmp / "data").mkdir(exist_ok=True)
+    (tmp / "floorplan.yaml").write_text(ARCHIVE_PLAN)
+    (tmp / out).mkdir()
+    env = {
+        "SPARK_CONF_DIR": str(conf_dir),
+        "XDG_CACHE_HOME": str(cache),
+        "FLOORIST_OUTPUT_URI": f"file://{tmp / out}",
+        "FLOORIST_DATA_DIR": str(tmp / "data"),
+        "FLOORPLAN_FILE": str(tmp / "floorplan.yaml"),
+        "FLOORIST_RUN_DATE": "2026-01-02",
+    }
+    stdout, stderr = _fresh_python(ARCHIVE_PROBE, tmp, env)
+    return json.loads(stdout.strip().splitlines()[-1]), stderr
+
+
+def _series_rows(tmp, out: str) -> list[tuple]:
+    import pyarrow.parquet as pq
+
+    day = tmp / out / "exports/series/year_created=2026/month_created=1/day_created=2"
+    return sorted(zip(*pq.read_table(day).to_pydict().values()))
+
+
+@pytest.fixture(scope="module")
+def archive_runs(tmp_path_factory):
+    """Three cron runs on a cache that holds an older key's archive and
+    mark and another trainer's live class list: the first leaves its key's
+    mark, the second trains the class-data archive, the third maps it.
+    Each run's record holds the files of the cache after it."""
+    tmp = tmp_path_factory.mktemp("archive")
+    cache = tmp / "cache/floorist_spark"
+    cache.mkdir(parents=True)
+    for other in (OLD_ARCHIVE, OLD_MARK, LIVE_CLASS_LIST):
+        (cache / other).write_text("other")
+    runs = []
+    for out in ("out1", "out2", "out3"):
+        seen, stderr = _archive_run(tmp, tmp / "cache", out)
+        seen["cache"] = sorted(p.name for p in cache.iterdir())
+        seen["rows"] = _series_rows(tmp, out)
+        runs.append((seen, stderr))
+    return tmp, runs
+
+
+OLD_ARCHIVE, OLD_MARK = "0123456789abcdef.jsa", "0123456789abcdef.seen"
+LIVE_CLASS_LIST = "fedcba9876543210.jsa.1.classlist"
+
+
+def _cds_args(seen: dict) -> list[str]:
+    return [a for a in seen["args"] if "SharedArchiveFile" in a or "DumpLoadedClassList" in a]
+
+
+def test_first_cron_run_of_a_key_only_leaves_its_mark(archive_runs):
+    # a cache that does not outlive its run (a fresh container) never pays
+    # for a dump: the first run launches as before
+    _, [(first, _), *_] = archive_runs
+    assert _cds_args(first) == [], first["args"]
+    [mark] = [n for n in first["cache"] if n.endswith(".seen") and n != OLD_MARK]
+    assert re.fullmatch(r"[0-9a-f]{16}\.seen", mark), first["cache"]
+    assert first["cache"] == sorted([OLD_ARCHIVE, OLD_MARK, LIVE_CLASS_LIST, "conf", mark])
+    assert first["code"] == 1  # the bad dump still fails the run
+
+
+def test_second_cron_run_trains_one_keyed_archive(archive_runs):
+    # the older key's archive and mark go, and so does this key's mark;
+    # another trainer's class list stays
+    _, [(first, _), (second, _), _] = archive_runs
+    [class_list] = [a.split("=", 1)[1] for a in second["args"] if a.startswith("-XX:DumpLoadedClassList=")]
+    key = os.path.basename(class_list).split(".")[0]
+    assert f"{key}.seen" in first["cache"], (class_list, first["cache"])
+    assert second["cache"] == sorted([LIVE_CLASS_LIST, "conf", f"{key}.jsa"])
+    assert second["code"] == 1
+
+
+def test_third_cron_run_maps_the_archive(archive_runs):
+    tmp, [(first, _), (second, _), (third, _)] = archive_runs
+    [archive] = [str(tmp / "cache/floorist_spark" / n) for n in second["cache"] if n.endswith(".jsa")]
+    assert _cds_args(third) == [f"-XX:SharedArchiveFile={archive}"], third["args"]
+    assert third["mapped"] == [archive]
+    assert third["cache"] == second["cache"]
+    assert third["code"] == 1
+    assert third["rows"] == second["rows"] == first["rows"] == [(i, 3 * i) for i in range(2500)]
+
+
+def test_cron_runs_that_train_and_map_keep_a_clean_log(archive_runs):
+    _, [_, *runs] = archive_runs
+    for _, stderr in runs:
+        assert "[cds]" not in stderr and "[warning]" not in stderr, stderr[-2000:]
+        assert _records(stderr)[-1].endswith("Dumped 1 from total of 2"), _records(stderr)
+
+
+def test_unwritable_cache_runs_without_archive(tmp_path):
+    # a cache that cannot be made (its parent is a file) leaves the launch,
+    # the exit code and the outputs as they are without an archive
+    blocked = tmp_path / "not_a_dir"
+    blocked.write_text("")
+    seen, _ = _archive_run(tmp_path, blocked, "out")
+    assert _cds_args(seen) == [], seen["args"]
+    assert seen["code"] == 1
+    assert _series_rows(tmp_path, "out") == [(i, 3 * i) for i in range(2500)]
+    assert blocked.read_text() == ""
+
+
+def test_read_only_cache_maps_an_archive_it_holds(tmp_path, monkeypatch):
+    # a pod that runs under another uid, or with a read-only root, can
+    # still map an archive baked into its cache; without one it launches
+    # as before. Root passes every permission check, so the read-only
+    # directory is simulated.
+    from floorist_spark.runner import ClassArchive
+
+    (tmp_path / "conf").mkdir()
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "conf"))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    assert ClassArchive.for_launch() is None  # leaves the mark
+    trainer = ClassArchive.for_launch()
+    assert trainer.java_options().startswith("-XX:DumpLoadedClassList=")
+
+    def read_only(*args, **kwargs):
+        raise PermissionError("read-only")
+
+    monkeypatch.setattr(os, "makedirs", read_only)
+    monkeypatch.setattr(os, "access", lambda *args: False)
+    assert ClassArchive.for_launch() is None
+    open(trainer.path, "wb").close()
+    assert ClassArchive.for_launch().java_options() == f"-XX:SharedArchiveFile={trainer.path} -Xlog:cds=off"
+
+
+@pytest.mark.parametrize("earlier", ["session", "spark-submit"])
+def test_launch_with_a_jvm_already_running_skips_the_archive(tmp_path, earlier):
+    # a session built earlier in the process, or spark-submit, owns the
+    # JVM, so its launch options are fixed: even with this key's mark,
+    # which would make a new launch train, nothing is recorded, dumped or
+    # hooked at exit
+    (tmp_path / "conf").mkdir()
+    (tmp_path / "data").mkdir()
+    (tmp_path / "out").mkdir()
+    (tmp_path / "floorplan.yaml").write_text("- prefix: exports/one\n  query: SELECT 1 AS x\n")
+    probe = f"""
+        import json
+        from floorist_spark.config import get_config
+        from floorist_spark.runner import ClassArchive, FlooristSpark, _configure_loglevel
+        from floorist_spark.session import get_spark
+
+        _configure_loglevel()
+        assert ClassArchive.for_launch() is None  # leaves the mark
+        if {earlier == "session"}:
+            get_spark("earlier")
+        engine = FlooristSpark(get_config())
+        mx = engine.spark._jvm.java.lang.management.ManagementFactory
+        print(json.dumps({{"args": list(mx.getRuntimeMXBean().getInputArguments())}}))
+        engine.run()
+        """
+    env = {
+        "SPARK_CONF_DIR": str(tmp_path / "conf"),
+        "XDG_CACHE_HOME": str(tmp_path / "cache"),
+        "FLOORIST_OUTPUT_URI": f"file://{tmp_path / 'out'}",
+        "FLOORIST_DATA_DIR": str(tmp_path / "data"),
+        "FLOORPLAN_FILE": str(tmp_path / "floorplan.yaml"),
+    }
+    stdout, stderr = _fresh_python(probe, tmp_path, env, submit=earlier == "spark-submit")
+    # spark-submit hands the Python driver's stdout and stderr to its JVM,
+    # which writes both, among its own lines, to its stdout
+    output = stdout + stderr
+    [seen] = [json.loads(line) for line in output.splitlines() if line.startswith('{"args"')]
+    assert _cds_args(seen) == [], seen["args"]
+    assert "Traceback" not in output and "Class-data" not in output, output[-2000:]
+    assert _records(output)[-1].endswith("Dumped 1 from total of 1"), _records(output)
+    cache = sorted(p.name for p in (tmp_path / "cache/floorist_spark").iterdir())
+    assert len(cache) == 2 and cache[0] == "conf" and cache[1].endswith(".seen"), cache
